@@ -578,6 +578,8 @@ def _bench_streaming(spark, sf_dir: str, n_slices: int = 6) -> dict:
 
     from pyspark.sql import functions as F
 
+    from __spark_entry__ import _await_stream
+
     from table_computing_spark.streaming.windows import stream_tumble
 
     try:
@@ -618,7 +620,8 @@ def _bench_streaming(spark, sf_dir: str, n_slices: int = 6) -> dict:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        # a timeout or a failed query fails the section: no rate is reported
+        _await_stream(q)
         wall = time.perf_counter() - t0
         # Poll progress via plain py4j (q.recentProgress) — NO callback
         # listener: the py4j callback server delivers late onQueryProgress

@@ -110,9 +110,13 @@ class StreamProcessing:
 
     def await_all(self, timeout_s: float | None = None) -> None:
         """Block until every query finishes; re-raises the first query
-        error (ref global-error stop :27-34)."""
+        error (ref global-error stop :27-34). A query still running after
+        `timeout_s` stops every query and raises TimeoutError."""
         for q in self._queries:
-            q.awaitTermination(timeout_s)
+            finished = q.awaitTermination(timeout_s)  # None without a timeout
+            if timeout_s is not None and not finished:
+                self.stop_all()
+                raise TimeoutError(f"streaming query did not finish within {timeout_s}s")
             if q.exception() is not None:
                 raise q.exception()
 

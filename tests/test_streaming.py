@@ -1008,6 +1008,17 @@ class TestStreamTopN:
         assert final == exp
 
 
+class TestStreamProcessingLifecycle:
+    def test_await_all_timeout_stops_and_raises(self, spark, tmp_path):
+        """A rate stream never ends: await_all's timeout must stop the
+        query and raise instead of returning with it still running."""
+        sp = StreamProcessing(checkpoint_root=str(tmp_path))
+        q = sp.sink(spark.readStream.format("rate").load(), "noop")
+        with pytest.raises(TimeoutError):
+            sp.await_all(timeout_s=1)
+        assert not q.isActive
+
+
 class TestStatefulOverByDuration:
     def test_stream_over_by_duration_crosses_batches(self, spark, stream_dir):
         """Trailing time-range window: buffer eviction at t-duration+1
