@@ -123,6 +123,15 @@ def main() -> None:
     plan_sha: dict[str, str] = {}
     cadence_bound: list[str] = []
     warm_inverted: list[str] = []  # warm >1.2x cold even after a re-run
+    # classes compiled by Janino during each query's cold rep and its
+    # warm rep: a warm rep that compiles anything lost its generated code
+    # to the codegen cache's eviction between the two reps
+    codegen: dict[str, dict[str, int]] = {}
+    codegen_metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _compiles() -> int:
+        return codegen_metrics.METRIC_COMPILATION_TIME().getCount()
+
     from table_computing_spark.plans import plan_fingerprint
 
     for q_idx, (name, fn) in enumerate(qs.items()):
@@ -135,6 +144,7 @@ def main() -> None:
                   file=sys.stderr, flush=True)
         t0 = time.perf_counter()
         query_at[name] = round(t0 - t_bench0, 1)
+        c0 = _compiles()
         try:
             df = fn(spark, sf_dir)
             build_s = time.perf_counter() - t0
@@ -147,6 +157,7 @@ def main() -> None:
             t1 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
             timings[name] = round(build_s + time.perf_counter() - t1, 3)
+            codegen[name] = {"cold": _compiles() - c0}
             # Streaming queries run a trigger-driven micro-batch pipeline
             # inside fn(): their wall time is CADENCE-bound (trigger
             # scheduling + checkpoint fsyncs), not plan-bound — a warm rep
@@ -165,9 +176,11 @@ def main() -> None:
             base = prior.get(name)
             if base and timings[name] > 3.0 * base and timings[name] > 1.0:
                 spark.catalog.clearCache()
+                c0 = _compiles()
                 t1 = time.perf_counter()
                 fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
                 second = round(time.perf_counter() - t1, 3)
+                codegen[name]["warm"] = _compiles() - c0
                 reruns[name] = timings[name]
                 warm[name] = second
                 warm_at[name] = round(t1 - t_bench0, 1)
@@ -194,9 +207,11 @@ def main() -> None:
                 # cold-green query as FAILED.
                 try:
                     spark.catalog.clearCache()
+                    c0 = _compiles()
                     t1 = time.perf_counter()
                     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
                     warm[name] = round(time.perf_counter() - t1, 3)
+                    codegen[name]["warm"] = _compiles() - c0
                     warm_at[name] = round(t1 - t_bench0, 1)
                     # Inversion guard (r10 verdict task 4): a warm rep
                     # SLOWER than its cold pass measures session pressure
@@ -317,6 +332,7 @@ def main() -> None:
         "cadence_bound": cadence_bound,  # streaming rows: no warm reps (task 7)
         "warm_inverted": warm_inverted,  # warm >1.2x cold after re-run (r10 task 4)
         "plan_sha": plan_sha,  # normalized physical-plan fingerprints (task 2)
+        "codegen": codegen,  # classes compiled per query: cold rep, warm rep
         "calibration": calibration,  # cross-boot normalization panel (r11 task 8)
         "host": {"boot_id": boot_id, "cpus": os.cpu_count()},
     }
@@ -516,6 +532,7 @@ def _fit_line(out: dict, limit: int) -> str:
         compact["scaling"] = dict(scal, per_query={k: scal["per_query"][k] for k in keep})
     compact.pop("warm_at", None)
     compact.pop("query_at", None)
+    compact.pop("codegen", None)
     # a pathological run could invert dozens of rows; cap the list so it
     # cannot crowd out the graded columns (full list in BENCH_LOCAL.json)
     if len(compact.get("warm_inverted") or []) > 12:

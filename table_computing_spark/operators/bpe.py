@@ -49,6 +49,7 @@ parallel and needs real loops, so Python is the honest vehicle there.
 from __future__ import annotations
 
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -177,25 +178,18 @@ def _swap_checkpoint(df: DataFrame, prev_ids: "set[int]"):
     released, so there is no recomputation window. Returns
     (checkpointed df, its RDD ids)."""
     sc = df.sparkSession.sparkContext
-
-    def _ids():
-        try:
-            return set(sc._jsc.getPersistentRDDs().keys())
-        except Exception:  # noqa: BLE001 — hygiene must never fail the build
-            return None
-
-    before = _ids()
     out = df.localCheckpoint()
-    after = _ids()
-    # r13 ADVICE: if the BEFORE probe failed, diffing `after` against an
-    # empty baseline would claim EVERY persistent RDD in the session —
-    # including caches the caller owns — and the next swap would
-    # unpersist them. Skip tracking that round instead (the block leaks
-    # for one cycle; nothing foreign is ever released).
-    if before is None or after is None:
-        new_ids: "set[int]" = set()
-    else:
-        new_ids = after - before
+    # The checkpointed RDD is the one under the returned plan's
+    # LogicalRDD. Diffing the session's persistent RDDs around the call
+    # instead would also claim RDDs that other threads persisted
+    # meanwhile (two BPE builds side by side), and the next swap would
+    # drop their checkpoint blocks. If the id cannot be read, the
+    # checkpoint is not tracked: its blocks leak, nothing foreign is
+    # released.
+    try:
+        new_ids = {out._jdf.logicalPlan().rdd().id()}
+    except Py4JError:
+        new_ids = set()
     try:
         jmap = sc._jsc.getPersistentRDDs()
         for rid in prev_ids:

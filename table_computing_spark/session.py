@@ -53,6 +53,8 @@ _DEFAULTS = {
     ),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # Measured: a 3-query loop needing 95 classes recompiled 33 per pass at 100, 0 at 1000.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Workers fork from a daemon that stops every task from re-reading
     # pyspark.zip's directory (see worker_daemon).
     "spark.python.daemon.module": "table_computing_spark.worker_daemon",

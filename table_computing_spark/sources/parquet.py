@@ -9,8 +9,10 @@ bytes they touch — the property that matters at 100 TB.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from table_computing_spark.table import Table
 
@@ -21,6 +23,46 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that Spark's Parquet schema inference reads
+# (ParquetFileFormat.mergeSchemasInParallel and the schema merge): a
+# schema inferred under one set of values is not the schema under another.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# (path, inference confs) -> ((st_ino, st_size, st_mtime_ns), schema).
+# The version is taken before inference, so a file replaced meanwhile
+# stores a stale version, and the next read infers again.
+_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, inferring a local file's schema once
+    per file version: inference is a Spark job per read, and the same
+    files are loaded by every query of a session. Directories, URIs and
+    relative paths (the JVM resolves those against its own working
+    directory), and paths that cannot be stat'ed, are inferred on every
+    read."""
+    try:
+        st = os.stat(path) if os.path.isabs(path) else None
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    version = (st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (version, df.schema)
+    return df
+
 
 def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The driver may hand us a session without our defaults; these are
@@ -30,7 +72,7 @@ def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamps).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
 

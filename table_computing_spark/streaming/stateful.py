@@ -22,6 +22,7 @@ oracle for these functions (tests/test_streaming.py compares both).
 
 from __future__ import annotations
 
+import io
 import json
 import math
 from collections.abc import Callable, Sequence
@@ -58,7 +59,7 @@ def _run_buffered(
     keep_fn: Callable[[pd.DataFrame], pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     if state.exists:
-        buf = pd.read_json(state.get[0], orient="table")
+        buf = pd.read_json(io.StringIO(state.get[0]), orient="table")
     else:
         buf = None
     batch = pd.concat(list(pdfs), ignore_index=True)
@@ -183,7 +184,7 @@ def stream_session_apply(
         import pandas as pd  # noqa: F811 — worker-side import
 
         if state.exists:
-            buf = pd.read_json(state.get[0], orient="table")
+            buf = pd.read_json(io.StringIO(state.get[0]), orient="table")
         else:
             buf = None
 
@@ -269,7 +270,7 @@ def stream_session_wallclock(
     def fn(key, pdfs, state):
         import pandas as pd  # noqa: F811 — worker-side import
 
-        buf = pd.read_json(state.get[0], orient="table") if state.exists else None
+        buf = pd.read_json(io.StringIO(state.get[0]), orient="table") if state.exists else None
 
         if state.hasTimedOut:
             # wall clock went silent past the idle horizon → flush the
@@ -382,7 +383,7 @@ def make_session_processor(time_col, gap_ms, idle, transform):
             import pandas as pd  # noqa: F811 — worker-side import
 
             existing = self._state.get() if self._state.exists() else None
-            buf = pd.read_json(existing[0], orient="table") if existing else None
+            buf = pd.read_json(io.StringIO(existing[0]), orient="table") if existing else None
             batch = pd.concat(list(rows), ignore_index=True)
             batch = batch.sort_values(tcol, kind="mergesort").reset_index(drop=True)
             history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
@@ -414,7 +415,7 @@ def make_session_processor(time_col, gap_ms, idle, transform):
             buf_json, deadline = self._state.get()
             if expired_timer_info.getExpiryTimeInMs() < deadline:
                 return  # superseded by a newer batch's re-arm
-            buf = pd.read_json(buf_json, orient="table")
+            buf = pd.read_json(io.StringIO(buf_json), orient="table")
             self._state.clear()
             if len(buf):
                 t_ms = _ms(buf[tcol]).tolist()

@@ -368,6 +368,27 @@ def test_bpe_segment_roundtrips_words(spark):
         assert rebuilt == " ".join(r["text"].lower().split())
 
 
+def test_bpe_checkpoint_swap_releases_only_its_own_blocks(spark):
+    # Another thread's checkpoint that appears while a BPE round
+    # checkpoints (two BPE builds side by side) must survive that
+    # build's next swap.
+    from table_computing_spark.operators import bpe
+
+    foreign = []
+
+    class _RacingCheckpoint:
+        sparkSession = spark
+
+        def localCheckpoint(self):
+            foreign.append(spark.range(5).selectExpr("id * 3 AS x").localCheckpoint())
+            return spark.range(4).localCheckpoint()
+
+    _, ids = bpe._swap_checkpoint(_RacingCheckpoint(), set())
+    second, _ = bpe._swap_checkpoint(spark.range(3), ids)
+    assert sorted(r["x"] for r in foreign[0].collect()) == [0, 3, 6, 9, 12]
+    assert second.count() == 3
+
+
 def test_bpe_greedy_merge_overlap(spark):
     from table_computing_spark.operators import bpe
     from pyspark.sql import functions as F

@@ -46,6 +46,7 @@ def _payload(n_queries=368, cpus=32, scaling=False):
         "cadence_bound": [],
         "warm_inverted": [],
         "plan_sha": {k: "ab" * 20 for k in queries},
+        "codegen": {k: {"cold": 40, "warm": 0} for k in queries},
         "calibration": {
             "start": {"calib_scan_agg": {"reps": [0.1] * 3, "min": 0.1}},
             "end": {"calib_scan_agg": {"reps": [0.12] * 3, "min": 0.12}},
@@ -78,6 +79,8 @@ def test_line_fits_and_keeps_graded_columns(fit_line):
     assert vals == sorted(vals, reverse=True)
     # streaming rates must reach the record (r14 task 5)
     assert d["streaming"]["best_batch_rows_per_sec"] > 0
+    # per-query compile counts live in BENCH_LOCAL.json only
+    assert "codegen" not in d
 
 
 def test_low_core_line_carries_scaling(fit_line):

@@ -7,6 +7,8 @@ the round-3 incident was exactly this assumption going stale.
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -44,8 +46,17 @@ def test_events_ts_both_physical_layouts(spark, tmp_path_factory):
     d_ns = tmp_path_factory.mktemp("ev_ns")
     _write(d_ns, pa.array([r[1] * 1000 for r in ROWS], pa.timestamp("ns")), None)
 
+    # layout B one second later, loaded, then replaced in place by
+    # layout A: the loader must not reuse the first file's schema
+    d_swap = tmp_path_factory.mktemp("ev_swap")
+    _write(d_swap, pa.array([(r[1] + 1_000_000) * 1000 for r in ROWS], pa.timestamp("ns")), None)
+    load_df(spark, str(d_swap), "events")
+    staged = tmp_path_factory.mktemp("ev_staged")
+    _write(staged, pa.array([r[1] for r in ROWS], pa.timestamp("us")), None)
+    os.replace(staged / "events.parquet", d_swap / "events.parquet")
+
     out = {}
-    for name, d in (("us", d_us), ("ns", d_ns)):
+    for name, d in (("us", d_us), ("ns", d_ns), ("replaced", d_swap)):
         df = load_df(spark, str(d), "events")
         assert dict(df.dtypes)["ts"] == "timestamp", (name, df.dtypes)
         out[name] = {
@@ -54,8 +65,39 @@ def test_events_ts_both_physical_layouts(spark, tmp_path_factory):
         }
     # same instants from either physical layout (exact to the ms; the
     # micros beyond ms also survive — check one directly)
-    assert out["us"] == out["ns"]
+    assert out["us"] == out["ns"] == out["replaced"]
     assert out["us"][1] == 1_600_000_000_123
+
+
+def _load_jobs(spark, group, sf_dir, name):
+    """Spark jobs submitted by one `load_df` call."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        load_df(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reload_of_unchanged_file_reuses_its_schema(spark, tmp_path):
+    _write(tmp_path, pa.array([r[1] for r in ROWS], pa.timestamp("us")), None)
+    assert _load_jobs(spark, f"schema-first-{id(tmp_path)}", str(tmp_path), "events") >= 1
+    assert _load_jobs(spark, f"schema-again-{id(tmp_path)}", str(tmp_path), "events") == 0
+
+
+def test_spark_written_parquet_directory_loads(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+    spark.createDataFrame([(0, "AFRICA")], "r_regionkey long, r_name string").write.parquet(path)
+    assert load_df(spark, str(tmp_path), "region").collect() == [(0, "AFRICA")]
+    # a directory is re-inferred on every load: a rewrite with a new
+    # column is seen
+    spark.createDataFrame(
+        [(1, "AMERICA", "x")], "r_regionkey long, r_name string, r_comment string"
+    ).write.mode("overwrite").parquet(path)
+    assert load_df(spark, str(tmp_path), "region").collect() == [(1, "AMERICA", "x")]
 
 
 # ------------------------------------------------ CSV / JSON files
