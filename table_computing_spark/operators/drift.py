@@ -55,6 +55,21 @@ def bucket_counts(
     )
 
 
+def _bucket_pair(
+    old: DataFrame, new: DataFrame, col: str, lo: float, hi: float, bins: int
+) -> DataFrame:
+    """Every bucket in [0, bins) with both sides' counts, zero-filled:
+    (bucket, n_old, n_new) — the ≤ bins-row table psi_drift and
+    js_divergence score."""
+    spark = old.sparkSession
+    all_buckets = spark.range(bins).select(F.col("id").cast("int").alias("bucket"))
+    return (
+        all_buckets.join(bucket_counts(old, col, lo, hi, bins, "n_old"), "bucket", "left")
+        .join(bucket_counts(new, col, lo, hi, bins, "n_new"), "bucket", "left")
+        .fillna(0, subset=["n_old", "n_new"])
+    )
+
+
 def psi_from_counts(j: DataFrame) -> DataFrame:
     """PSI report from joined per-bucket counts (bucket, n_old, n_new)
     — the post-aggregation core, shared by the batch operator and the
@@ -86,14 +101,7 @@ def psi_drift(
     """Per-bucket drift report + total PSI (repeated on each row so the
     result is a single self-contained table):
     (bucket, n_old, n_new, p_old, p_new, psi_term, psi_total)."""
-    spark = old.sparkSession
-    all_buckets = spark.range(bins).select(F.col("id").cast("int").alias("bucket"))
-    j = (
-        all_buckets.join(bucket_counts(old, col, lo, hi, bins, "n_old"), "bucket", "left")
-        .join(bucket_counts(new, col, lo, hi, bins, "n_new"), "bucket", "left")
-        .fillna(0, subset=["n_old", "n_new"])
-    )
-    return psi_from_counts(j)
+    return psi_from_counts(_bucket_pair(old, new, col, lo, hi, bins))
 
 
 def woe_iv(
@@ -305,6 +313,27 @@ def benford_report(
     )
 
 
+def _group_moments(
+    df: DataFrame, value_col: Column, group_col: str
+) -> tuple[DataFrame, Column]:
+    """Per-group sufficient statistics (group_col, n, __s = Σx,
+    __ss = Σx², in DECIMAL so the sums are order-free) and the sample
+    variance over them as a column. It is NULL where n = 1, which has
+    no sample variance, instead of a division by zero (r09 advice)."""
+    x = value_col.cast("decimal(38,0)")
+    per = df.groupBy(group_col).agg(
+        F.count(value_col).alias("n"),
+        F.sum(x).alias("__s"),
+        F.sum(x * x).alias("__ss"),
+    )
+    nd = F.col("n").cast("double")
+    var = (
+        F.col("__ss").cast("double")
+        - F.col("__s").cast("double") * F.col("__s").cast("double") / nd
+    ) / (nd - F.lit(1.0))
+    return per, F.when(F.col("n") > 1, var)
+
+
 def welch_ttest(
     df: DataFrame,
     value_col: Column,
@@ -328,6 +357,10 @@ def welch_ttest(
     Shape: one hash aggregate on group_col, the 1-row control slice
     broadcast back — no window, no self-join of data rows.
 
+    A group with a single row has no sample variance: its `var`,
+    `t_stat` and `df_welch` are NULL (the power_mde rule). A one-row
+    control makes `t_stat` and `df_welch` NULL for every group.
+
     Raises ValueError when `control` names a group with no rows — a
     misspelled control label must fail loudly, not return an empty
     frame that reads as "no treatment groups" (r08 ADVICE fix). The
@@ -339,17 +372,8 @@ def welch_ttest(
             f"welch_ttest: control group {control!r} has no rows in "
             f"column {group_col!r}"
         )
-    x = value_col.cast("decimal(38,0)")
-    per = df.groupBy(group_col).agg(
-        F.count(value_col).alias("n"),
-        F.sum(x).alias("__s"),
-        F.sum(x * x).alias("__ss"),
-    )
-    nd = F.col("n").cast("double")
-    mean = F.col("__s").cast("double") / nd
-    var = (
-        F.col("__ss").cast("double") - F.col("__s").cast("double") * F.col("__s").cast("double") / nd
-    ) / (nd - F.lit(1.0))
+    per, var = _group_moments(df, value_col, group_col)
+    mean = F.col("__s").cast("double") / F.col("n").cast("double")
     per = per.withColumn("mean", mean).withColumn("var", var)
     ctrl = per.filter(F.col(group_col) == control).select(
         F.col("n").alias("__cn"), F.col("mean").alias("__cm"), F.col("var").alias("__cv")
@@ -601,21 +625,10 @@ def power_mde(
     statistics aggregate in DECIMAL (pass an integer-unit value_col);
     the variance and MDE arithmetic runs in fixed op order on doubles
     and rounds once — engine-exact."""
-    x = value_col.cast("decimal(38,0)")
-    per = df.groupBy(group_col).agg(
-        F.count(value_col).alias("n"),
-        F.sum(x).alias("__s"),
-        F.sum(x * x).alias("__ss"),
+    per, var = _group_moments(df, value_col, group_col)
+    mde = F.lit(z_alpha + z_power) * F.sqrt(
+        F.lit(2.0) * var / F.col("n").cast("double")
     )
-    nd = F.col("n").cast("double")
-    var = (
-        F.col("__ss").cast("double")
-        - F.col("__s").cast("double") * F.col("__s").cast("double") / nd
-    ) / (nd - F.lit(1.0))
-    # n=1 groups have no sample variance: emit explicit NULLs rather
-    # than the silent Inf/NaN the bare division produces (r09 advice)
-    var = F.when(F.col("n") > 1, var)
-    mde = F.lit(z_alpha + z_power) * F.sqrt(F.lit(2.0) * var / nd)
     return per.select(
         group_col,
         "n",
@@ -645,13 +658,7 @@ def js_divergence(
     integer NANOS, exact long sum for the total, one final division.
     Per-bucket report + total repeated on each row:
     (bucket, n_old, n_new, p_old, p_new, js_term, js_total)."""
-    spark = old.sparkSession
-    all_buckets = spark.range(bins).select(F.col("id").cast("int").alias("bucket"))
-    j = (
-        all_buckets.join(bucket_counts(old, col, lo, hi, bins, "n_old"), "bucket", "left")
-        .join(bucket_counts(new, col, lo, hi, bins, "n_new"), "bucket", "left")
-        .fillna(0, subset=["n_old", "n_new"])
-    )
+    j = _bucket_pair(old, new, col, lo, hi, bins)
     # A side with ZERO in-range rows makes every p (or q) 0/0: the
     # report would come back silently all-NULL (or ANSI-error) instead
     # of failing loudly — raise, matching the srm_check (ratio<=0) and
@@ -993,6 +1000,40 @@ def spearman_corr(
     return agg.select(F.round(rho, round_to).alias("spearman_rho"), "n")
 
 
+def _chi2_cells(
+    df: DataFrame, feature_col: str, value_col: Column, label_col: Column
+) -> DataFrame:
+    """Per-feature Pearson cell sum of a LONG-format (feature, value,
+    label) frame: (feature, __t = Σ_cells nano-rounded (O − E)²/E as
+    DECIMAL(38,0), __nv = |values|, __nl = |labels|, __nn = n). The
+    cell algebra of chi2_screen and cramers_v, documented there."""
+    base = df.select(
+        F.col(feature_col).alias("feature"),
+        value_col.cast("string").alias("__v"),
+        label_col.cast("string").alias("__l"),
+    ).filter(F.col("__v").isNotNull() & F.col("__l").isNotNull())
+    cells = base.groupBy("feature", "__v", "__l").agg(
+        F.count(F.lit(1)).alias("__o")
+    )
+    rowm = cells.groupBy("feature", "__v").agg(F.sum("__o").alias("__r"))
+    colm = cells.groupBy("feature", "__l").agg(F.sum("__o").alias("__c"))
+    tot = cells.groupBy("feature").agg(F.sum("__o").alias("__n"))
+    grid = rowm.join(colm, "feature").join(tot, "feature").join(
+        cells, ["feature", "__v", "__l"], "left"
+    )
+    o = F.coalesce(F.col("__o"), F.lit(0)).cast("double")
+    e = F.col("__r").cast("double") * F.col("__c").cast("double") / F.col(
+        "__n"
+    ).cast("double")
+    term = F.round((o - e) * (o - e) / e * 1e9).cast("decimal(38,0)")
+    return grid.groupBy("feature").agg(
+        F.sum(term).alias("__t"),
+        F.count_distinct(F.col("__v")).alias("__nv"),
+        F.count_distinct(F.col("__l")).alias("__nl"),
+        F.first("__n").alias("__nn"),
+    )
+
+
 def chi2_screen(
     df: DataFrame,
     feature_col: str,
@@ -1020,31 +1061,7 @@ def chi2_screen(
     accumulator is DECIMAL, not long — a long would silently wrap past
     ~9e9 effective rows in non-ANSI Spark (r11 ADVICE finding).
     Output: (feature, chi2, dof, n)."""
-    base = df.select(
-        F.col(feature_col).alias("feature"),
-        value_col.cast("string").alias("__v"),
-        label_col.cast("string").alias("__l"),
-    ).filter(F.col("__v").isNotNull() & F.col("__l").isNotNull())
-    cells = base.groupBy("feature", "__v", "__l").agg(
-        F.count(F.lit(1)).alias("__o")
-    )
-    rowm = cells.groupBy("feature", "__v").agg(F.sum("__o").alias("__r"))
-    colm = cells.groupBy("feature", "__l").agg(F.sum("__o").alias("__c"))
-    tot = cells.groupBy("feature").agg(F.sum("__o").alias("__n"))
-    grid = rowm.join(colm, "feature").join(tot, "feature").join(
-        cells, ["feature", "__v", "__l"], "left"
-    )
-    o = F.coalesce(F.col("__o"), F.lit(0)).cast("double")
-    e = F.col("__r").cast("double") * F.col("__c").cast("double") / F.col(
-        "__n"
-    ).cast("double")
-    term = F.round((o - e) * (o - e) / e * 1e9).cast("decimal(38,0)")
-    agg = grid.groupBy("feature").agg(
-        F.sum(term).alias("__t"),
-        F.count_distinct(F.col("__v")).alias("__nv"),
-        F.count_distinct(F.col("__l")).alias("__nl"),
-        F.first("__n").alias("__nn"),
-    )
+    agg = _chi2_cells(df, feature_col, value_col, label_col)
     return agg.select(
         "feature",
         F.round(F.col("__t").cast("double") / 1e9, round_to).alias("chi2"),
@@ -1577,31 +1594,7 @@ def cramers_v(
     (cells enumerated from the marginal cross so O = 0 cells
     contribute E); V is NULL for degenerate 1×c / r×1 tables. Output:
     (feature, chi2, v, dof, n)."""
-    base = df.select(
-        F.col(feature_col).alias("feature"),
-        value_col.cast("string").alias("__v"),
-        label_col.cast("string").alias("__l"),
-    ).filter(F.col("__v").isNotNull() & F.col("__l").isNotNull())
-    cells = base.groupBy("feature", "__v", "__l").agg(
-        F.count(F.lit(1)).alias("__o")
-    )
-    rowm = cells.groupBy("feature", "__v").agg(F.sum("__o").alias("__r"))
-    colm = cells.groupBy("feature", "__l").agg(F.sum("__o").alias("__c"))
-    tot = cells.groupBy("feature").agg(F.sum("__o").alias("__n"))
-    grid = rowm.join(colm, "feature").join(tot, "feature").join(
-        cells, ["feature", "__v", "__l"], "left"
-    )
-    o = F.coalesce(F.col("__o"), F.lit(0)).cast("double")
-    e = F.col("__r").cast("double") * F.col("__c").cast("double") / F.col(
-        "__n"
-    ).cast("double")
-    term = F.round((o - e) * (o - e) / e * 1e9).cast("decimal(38,0)")
-    agg = grid.groupBy("feature").agg(
-        F.sum(term).alias("__t"),
-        F.count_distinct(F.col("__v")).alias("__nv"),
-        F.count_distinct(F.col("__l")).alias("__nl"),
-        F.first("__n").alias("__nn"),
-    )
+    agg = _chi2_cells(df, feature_col, value_col, label_col)
     chi2 = F.col("__t").cast("double") / 1e9
     mind = F.least(F.col("__nv"), F.col("__nl")).cast("double") - 1.0
     v = F.when(
@@ -1750,6 +1743,95 @@ def sprt_from_counts(
     )
 
 
+def _pooled_counts(
+    old: DataFrame, new: DataFrame, value_col: Column, cast: str
+) -> DataFrame:
+    """The pooled per-value count table (__v, __no, __nn) of two
+    samples: `value_col` cast to `cast`, NULLs dropped, one hash
+    aggregate per side, full-outer joined on the value and zero-filled
+    (a value seen on one side only counts 0 on the other). The
+    distinct-value axis the two-sample statistics below walk."""
+    o = old.select(value_col.cast(cast).alias("__v")).filter(
+        F.col("__v").isNotNull()
+    )
+    n = new.select(value_col.cast(cast).alias("__v")).filter(
+        F.col("__v").isNotNull()
+    )
+    return (
+        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
+        .join(
+            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
+            "__v",
+            "full_outer",
+        )
+        .fillna(0, subset=["__no", "__nn"])
+    )
+
+
+def _sample_sizes(per: DataFrame, fn: str, undefined: str) -> tuple[int, int]:
+    """Side totals (N_old, N_new) of a pooled count table, read eagerly
+    with one `.first()`; raises ValueError naming `fn` when either side
+    has no non-null rows (`undefined` says what that leaves undefined).
+
+    The totals are plain sums over the distinct-value table. Reading
+    them from the prefix pass (max of the running sum) re-executed the
+    whole prefix window+join chain once per call just for two scalars,
+    so callers that go on to a prefix pass materialize `per` once
+    (_reuse) first, take the totals here, and only then build the
+    prefix over the same materialized rows: one window-chain execution
+    per call instead of two, and the empty-side raise never pays for
+    the prefix build (r15; output identical, as counts are >= 0 so
+    max(running sum) == sum)."""
+    tot = per.agg(
+        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
+    ).first()
+    empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
+    if empty:
+        raise ValueError(
+            f"{fn}: side(s) {empty} have no non-null rows — "
+            f"{undefined} is undefined"
+        )
+    return int(tot["__to"]), int(tot["__tn"])
+
+
+def _cdf_gap(old_count: str, new_count: str, no: int, nn: int) -> Column:
+    """count_old·N_new − count_new·N_old in DECIMAL(38,0): the signed
+    gap F_old − F_new of two counts scaled by N_old·N_new to an exact
+    integer, so nothing is divided before the final readout."""
+    dec = "decimal(38,0)"
+    return (
+        F.col(old_count).cast(dec) * F.lit(nn).cast(dec)
+        - F.col(new_count).cast(dec) * F.lit(no).cast(dec)
+    )
+
+
+def _cdf_steps(per: DataFrame) -> DataFrame:
+    """Each pooled value with its inclusive running counts and its
+    successor: (__rk, __v, __co, __cn, __v_next). Prefix sums and a
+    global dense rank come from prefix.prefix_agg (the distributed
+    two-pass prefix, never an unpartitioned window); the successor from
+    a rank → rank+1 self-equi-join on the distinct table (one hash
+    shuffle on the rank), which drops the last value."""
+    from table_computing_spark.operators.prefix import prefix_agg
+
+    pre = prefix_agg(
+        per,
+        order_by=["__v"],
+        specs={
+            "__co": ("sum", "__no"),   # inclusive running count, old
+            "__cn": ("sum", "__nn"),   # inclusive running count, new
+            "__rk0": ("count", "__v"),
+        },
+        exclusive=False,
+    ).select(
+        "__v", "__co", "__cn", F.col("__rk0").cast("long").alias("__rk")
+    )
+    nxt = pre.select(
+        (F.col("__rk") - 1).alias("__rk"), F.col("__v").alias("__v_next")
+    )
+    return pre.join(nxt, "__rk")
+
+
 def wasserstein_1d(
     old: DataFrame,
     new: DataFrame,
@@ -1778,33 +1860,17 @@ def wasserstein_1d(
     sum, bit-identical on any engine and any partitioning.
 
     Scale shape: one hash aggregate per side to the pooled
-    distinct-value table, inclusive prefix sums + a global dense rank
-    via prefix.prefix_agg (the distributed two-pass prefix — never an
-    unpartitioned window), and the successor gap from a rank → rank+1
-    self-equi-join on the distinct table (one hash shuffle on the
-    rank). NULL values drop. Raises when either side is empty (W1
-    against an empty distribution is undefined — the js_divergence
-    discipline). A NaN value violates the integer-exact contract and
-    raises at the ANSI long cast (loud, though the error names the
-    cast rather than this function — r14 pass, documented contract:
-    NULLs drop, NaN refuses). Output one row:
+    distinct-value table, then _cdf_steps' distributed prefix pass and
+    rank → rank+1 successor join. NULL values drop. Raises when either
+    side is empty (W1 against an empty distribution is undefined — the
+    js_divergence discipline). A NaN value violates the integer-exact
+    contract and raises at the ANSI long cast (loud, though the error
+    names the cast rather than this function — r14 pass, documented
+    contract: NULLs drop, NaN refuses). Output one row:
     (w1, n_old, n_new, n_values)."""
-    o = old.select(value_col.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull()
+    return wasserstein_from_counts(
+        _pooled_counts(old, new, value_col, "long"), round_to=round_to
     )
-    n = new.select(value_col.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    per = (
-        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
-        .join(
-            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
-            "__v",
-            "full_outer",
-        )
-        .fillna(0, subset=["__no", "__nn"])
-    )
-    return wasserstein_from_counts(per, round_to=round_to)
 
 
 def wasserstein_from_counts(per: DataFrame, round_to: int = 6) -> DataFrame:
@@ -1815,57 +1881,18 @@ def wasserstein_from_counts(per: DataFrame, round_to: int = 6) -> DataFrame:
     complete-mode hash aggregate, state is distinct-value-sized), and
     W1 is this bounded read on top. Same exact-integer algebra and
     empty-side contract as wasserstein_1d."""
-    from table_computing_spark.operators.prefix import prefix_agg
-
     dec = "decimal(38,0)"
-    # totals = plain sums over the distinct-value table; reading them
-    # from `pre` (max of the running sum) re-executed the whole
-    # prefix window+join chain once per call JUST for two scalars.
-    # Materialize `per` once (_reuse), take totals from it directly,
-    # and only then build the prefix pass over the same materialized
-    # rows — one window-chain execution per call instead of two, and
-    # the empty-side raise no longer pays the prefix build at all
-    # (r15, VERDICT task 4; output identical: counts are >= 0 so
-    # max(running sum) == sum).
     per = _reuse(per)
-    tot = per.agg(
-        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
-    ).first()
-    if not tot["__to"] or not tot["__tn"]:
-        empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
-        raise ValueError(
-            f"wasserstein: side(s) {empty} have no non-null rows — "
-            "W1 against an empty distribution is undefined"
-        )
-    pre = prefix_agg(
-        per,
-        order_by=["__v"],
-        specs={
-            "__co": ("sum", "__no"),   # inclusive running count, old
-            "__cn": ("sum", "__nn"),   # inclusive running count, new
-            "__rk0": ("count", "__v"),
-        },
-        exclusive=False,
-    ).select(
-        "__v", "__co", "__cn", F.col("__rk0").cast("long").alias("__rk")
-    )
-    nxt = pre.select(
-        (F.col("__rk") - 1).alias("__rk"), F.col("__v").alias("__v_next")
-    )
-    stepped = pre.join(nxt, "__rk")  # drops the last value: no successor
-    num = F.abs(
-        F.col("__co").cast(dec) * F.lit(int(tot["__tn"])).cast(dec)
-        - F.col("__cn").cast(dec) * F.lit(int(tot["__to"])).cast(dec)
-    ) * (F.col("__v_next") - F.col("__v")).cast(dec)
-    agg = stepped.agg(F.sum(num).alias("__w1n"))
-    w1 = F.col("__w1n").cast("double") / (
-        float(tot["__to"]) * float(tot["__tn"])
-    )
+    no, nn = _sample_sizes(per, "wasserstein", "W1 against an empty distribution")
+    gap = (F.col("__v_next") - F.col("__v")).cast(dec)
+    num = F.abs(_cdf_gap("__co", "__cn", no, nn)) * gap
+    agg = _cdf_steps(per).agg(F.sum(num).alias("__w1n"))
+    w1 = F.col("__w1n").cast("double") / (float(no) * float(nn))
     return agg.select(
         # a single pooled value has no successor row: W1 is exactly 0
         F.round(F.coalesce(w1, F.lit(0.0)), round_to).alias("w1"),
-        F.lit(int(tot["__to"])).cast("long").alias("n_old"),
-        F.lit(int(tot["__tn"])).cast("long").alias("n_new"),
+        F.lit(no).cast("long").alias("n_old"),
+        F.lit(nn).cast("long").alias("n_new"),
     ).crossJoin(
         F.broadcast(per.agg(F.count(F.lit(1)).cast("long").alias("n_values")))
     )
@@ -1900,51 +1927,15 @@ def cvm_2sample(
     from table_computing_spark.operators.prefix import prefix_agg
 
     dec = "decimal(38,0)"
-    o = old.select(value_col.cast("double").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    n = new.select(value_col.cast("double").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    per = (
-        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
-        .join(
-            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
-            "__v",
-            "full_outer",
-        )
-        .fillna(0, subset=["__no", "__nn"])
-    )
-    # totals = plain sums over the distinct-value table; reading them
-    # from `pre` (max of the running sum) re-executed the whole
-    # prefix window+join chain once per call JUST for two scalars.
-    # Materialize `per` once (_reuse), take totals from it directly,
-    # and only then build the prefix pass over the same materialized
-    # rows — one window-chain execution per call instead of two, and
-    # the empty-side raise no longer pays the prefix build at all
-    # (r15, VERDICT task 4; output identical: counts are >= 0 so
-    # max(running sum) == sum).
-    per = _reuse(per)
-    tot = per.agg(
-        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
-    ).first()
-    if not tot["__to"] or not tot["__tn"]:
-        empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
-        raise ValueError(
-            f"cvm_2sample: side(s) {empty} have no non-null rows — "
-            "CvM against an empty distribution is undefined"
-        )
+    per = _reuse(_pooled_counts(old, new, value_col, "double"))
+    no, nn = _sample_sizes(per, "cvm_2sample", "CvM against an empty distribution")
     pre = prefix_agg(
         per,
         order_by=["__v"],
         specs={"__co": ("sum", "__no"), "__cn": ("sum", "__nn")},
         exclusive=False,
     )
-    no, nn = int(tot["__to"]), int(tot["__tn"])
-    d = (
-        F.col("__co").cast(dec) * F.lit(nn).cast(dec)
-        - F.col("__cn").cast(dec) * F.lit(no).cast(dec)
-    )
+    d = _cdf_gap("__co", "__cn", no, nn)
     num = (F.col("__no") + F.col("__nn")).cast(dec) * d * d
     agg = pre.agg(F.sum(num).alias("__tnum"))
     big_n = float(no + nn)
@@ -2138,36 +2129,9 @@ def tv_distance(
     full mass (the full-outer join, zero-filled). NULL values drop.
     Raises when either side is empty. Output one row:
     (tv, n_old, n_new, n_categories)."""
-    dec = "decimal(38,0)"
-    o = old.select(value_col.cast("string").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    n = new.select(value_col.cast("string").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    per = (
-        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
-        .join(
-            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
-            "__v",
-            "full_outer",
-        )
-        .fillna(0, subset=["__no", "__nn"])
-    )
-    tot = per.agg(
-        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
-    ).first()
-    if not tot["__to"] or not tot["__tn"]:
-        empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
-        raise ValueError(
-            f"tv_distance: side(s) {empty} have no non-null rows — "
-            "TV against an empty distribution is undefined"
-        )
-    no, nn = int(tot["__to"]), int(tot["__tn"])
-    num = F.abs(
-        F.col("__no").cast(dec) * F.lit(nn).cast(dec)
-        - F.col("__nn").cast(dec) * F.lit(no).cast(dec)
-    )
+    per = _pooled_counts(old, new, value_col, "string")
+    no, nn = _sample_sizes(per, "tv_distance", "TV against an empty distribution")
+    num = F.abs(_cdf_gap("__no", "__nn", no, nn))
     agg = per.agg(
         F.sum(num).alias("__t"), F.count(F.lit(1)).alias("n_categories")
     )
@@ -2206,60 +2170,11 @@ def energy_distance(
     raises at the ANSI long cast — the wasserstein_1d note). Raises
     when either side is empty. Output one row:
     (e_dist, n_old, n_new)."""
-    from table_computing_spark.operators.prefix import prefix_agg
-
     dec = "decimal(38,0)"
-    o = old.select(value_col.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull()
+    per = _reuse(_pooled_counts(old, new, value_col, "long"))
+    no, nn = _sample_sizes(
+        per, "energy_distance", "the energy distance to an empty distribution"
     )
-    n = new.select(value_col.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    per = (
-        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
-        .join(
-            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
-            "__v",
-            "full_outer",
-        )
-        .fillna(0, subset=["__no", "__nn"])
-    )
-    # totals = plain sums over the distinct-value table; reading them
-    # from `pre` (max of the running sum) re-executed the whole
-    # prefix window+join chain once per call JUST for two scalars.
-    # Materialize `per` once (_reuse), take totals from it directly,
-    # and only then build the prefix pass over the same materialized
-    # rows — one window-chain execution per call instead of two, and
-    # the empty-side raise no longer pays the prefix build at all
-    # (r15, VERDICT task 4; output identical: counts are >= 0 so
-    # max(running sum) == sum).
-    per = _reuse(per)
-    tot = per.agg(
-        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
-    ).first()
-    if not tot["__to"] or not tot["__tn"]:
-        empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
-        raise ValueError(
-            f"energy_distance: side(s) {empty} have no non-null rows — "
-            "the energy distance to an empty distribution is undefined"
-        )
-    pre = prefix_agg(
-        per,
-        order_by=["__v"],
-        specs={
-            "__co": ("sum", "__no"),
-            "__cn": ("sum", "__nn"),
-            "__rk0": ("count", "__v"),
-        },
-        exclusive=False,
-    ).select(
-        "__v", "__co", "__cn", F.col("__rk0").cast("long").alias("__rk")
-    )
-    no, nn = int(tot["__to"]), int(tot["__tn"])
-    nxt = pre.select(
-        (F.col("__rk") - 1).alias("__rk"), F.col("__v").alias("__v_next")
-    )
-    stepped = pre.join(nxt, "__rk")
     gap = (F.col("__v_next") - F.col("__v")).cast(dec)
     co, cn = F.col("__co").cast(dec), F.col("__cn").cast(dec)
     s_xy = gap * (
@@ -2267,7 +2182,7 @@ def energy_distance(
     )
     s_xx = gap * F.lit(2).cast(dec) * co * (F.lit(no).cast(dec) - co)
     s_yy = gap * F.lit(2).cast(dec) * cn * (F.lit(nn).cast(dec) - cn)
-    agg = stepped.agg(
+    agg = _cdf_steps(per).agg(
         F.sum(s_xy).alias("__axy"),
         F.sum(s_xx).alias("__axx"),
         F.sum(s_yy).alias("__ayy"),
@@ -2310,51 +2225,15 @@ def kuiper_2sample(
     from table_computing_spark.operators.prefix import prefix_agg
 
     dec = "decimal(38,0)"
-    o = old.select(value_col.cast("double").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    n = new.select(value_col.cast("double").alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    per = (
-        o.groupBy("__v").agg(F.count(F.lit(1)).alias("__no"))
-        .join(
-            n.groupBy("__v").agg(F.count(F.lit(1)).alias("__nn")),
-            "__v",
-            "full_outer",
-        )
-        .fillna(0, subset=["__no", "__nn"])
-    )
-    # totals = plain sums over the distinct-value table; reading them
-    # from `pre` (max of the running sum) re-executed the whole
-    # prefix window+join chain once per call JUST for two scalars.
-    # Materialize `per` once (_reuse), take totals from it directly,
-    # and only then build the prefix pass over the same materialized
-    # rows — one window-chain execution per call instead of two, and
-    # the empty-side raise no longer pays the prefix build at all
-    # (r15, VERDICT task 4; output identical: counts are >= 0 so
-    # max(running sum) == sum).
-    per = _reuse(per)
-    tot = per.agg(
-        F.sum("__no").alias("__to"), F.sum("__nn").alias("__tn")
-    ).first()
-    if not tot["__to"] or not tot["__tn"]:
-        empty = [s for s, v in (("old", tot["__to"]), ("new", tot["__tn"])) if not v]
-        raise ValueError(
-            f"kuiper_2sample: side(s) {empty} have no non-null rows — "
-            "Kuiper against an empty distribution is undefined"
-        )
+    per = _reuse(_pooled_counts(old, new, value_col, "double"))
+    no, nn = _sample_sizes(per, "kuiper_2sample", "Kuiper against an empty distribution")
     pre = prefix_agg(
         per,
         order_by=["__v"],
         specs={"__co": ("sum", "__no"), "__cn": ("sum", "__nn")},
         exclusive=False,
     )
-    no, nn = int(tot["__to"]), int(tot["__tn"])
-    d = (
-        F.col("__co").cast(dec) * F.lit(nn).cast(dec)
-        - F.col("__cn").cast(dec) * F.lit(no).cast(dec)
-    )
+    d = _cdf_gap("__co", "__cn", no, nn)
     agg = pre.agg(
         F.greatest(F.max(d), F.lit(0).cast(dec)).alias("__dp"),
         F.greatest(F.max(-d), F.lit(0).cast(dec)).alias("__dm"),

@@ -842,6 +842,35 @@ def test_power_mde_single_row_group_emits_null(spark):
     assert out["pair"]["var"] == 200.0 and out["pair"]["mde"] is not None
 
 
+def test_welch_ttest_single_row_group_emits_null(spark):
+    """A one-row group (treatment or control) has no sample variance:
+    NULL var/t_stat/df_welch instead of an ANSI DIVIDE_BY_ZERO from the
+    (n-1) division, the power_mde rule."""
+    from table_computing_spark.operators.drift import welch_ttest
+
+    df = spark.createDataFrame(
+        [("ctl", 10), ("ctl", 14), ("ctl", 18), ("solo", 20),
+         ("pair", 20), ("pair", 30)],
+        "grp string, v long",
+    )
+    out = {
+        r["grp"]: r
+        for r in welch_ttest(df, F.col("v"), "grp", control="ctl").collect()
+    }
+    solo, pair = out["solo"], out["pair"]
+    assert solo["n"] == 1 and solo["mean"] == 20.0
+    assert solo["var"] is None and solo["t_stat"] is None
+    assert solo["df_welch"] is None
+    # the other groups are unaffected: var = 50, t = (25 − 14)/sqrt(25 + 16/3)
+    assert pair["var"] == 50.0
+    assert pair["t_stat"] == round(11 / (25 + 16 / 3) ** 0.5, 6)
+    one_ctl = df.filter("grp != 'ctl' OR v = 10")
+    rows = welch_ttest(one_ctl, F.col("v"), "grp", control="ctl").collect()
+    assert sorted(r["grp"] for r in rows) == ["pair", "solo"]
+    assert all(r["t_stat"] is None and r["df_welch"] is None for r in rows)
+    assert {r["grp"]: r["var"] for r in rows} == {"pair": 50.0, "solo": None}
+
+
 def test_srm_check_rejects_zero_ratio(spark):
     """Declared ratio 0.0 would divide by zero — must raise like
     welch_ttest's missing-control check (r09 advice)."""

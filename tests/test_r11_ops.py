@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 
 def _hash_cloud(spark, n: int):
-    """The sweep fixture shape (tools/scaling_sweep_r10.py): pseudo-
-    random points on a FIXED 100000x100000 extent — more rows = denser,
-    the exact regime where a fixed eps OOMs the eps-graph."""
+    """The sweep fixture shape (PLANS.md, "Round-10 two-scale sweep"):
+    pseudo-random points on a FIXED 100000x100000 extent — more rows
+    = denser, the exact regime where a fixed eps OOMs the eps-graph."""
     return spark.range(1, n + 1).select(
         F.col("id"),
         ((F.col("id") * 7919) % 100000).alias("x"),

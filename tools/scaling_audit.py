@@ -8,6 +8,10 @@ linear scaling; the documented shape for every family is noted in
 PLANS.md, and anything super-linear beyond its documented shape is a
 bug or a cap to write down.
 
+Each (query, scale) is timed REPS times and the minimum kept: the
+least-contended estimate, since a single rep can be a cache or
+host-noise artifact.
+
 Usage: python tools/scaling_audit.py [query ...]   (default: cost board)
 Emits a markdown table on stdout and a JSON blob to .scale/audit.json.
 """
@@ -37,6 +41,23 @@ COST_BOARD = [
     "q_groupby_agg",
     "q_window_tumble",
 ]
+REPS = 2
+
+
+def _timed(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one noop-sink run; caches and persisted RDDs are
+    dropped afterwards, also when the run fails."""
+    t0 = time.perf_counter()
+    try:
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - t0
+    finally:
+        spark.catalog.clearCache()
+        try:
+            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist()
+        except Exception:  # noqa: BLE001
+            pass
 
 
 def main() -> None:
@@ -67,25 +88,16 @@ def main() -> None:
         # would otherwise pollute the smallest (fastest) measurement
         # and flatten the fitted slope
         try:
-            fn(spark, dirs[scales[0]]).write.mode("overwrite").format("noop").save()
-            spark.catalog.clearCache()
+            _timed(spark, fn, dirs[scales[0]])
         except Exception:  # noqa: BLE001 — the timed run reports it
             pass
         for s in scales:
-            t0 = time.perf_counter()
             try:
-                fn(spark, dirs[s]).write.mode("overwrite").format("noop").save()
-                times[s] = round(time.perf_counter() - t0, 3)
+                times[s] = round(min(_timed(spark, fn, dirs[s]) for _ in range(REPS)), 3)
             except Exception as e:  # noqa: BLE001 — record, keep auditing
                 times[s] = None
                 print(f"[audit] {name}@{s}: FAILED {type(e).__name__}: {e}"[:200],
                       file=sys.stderr, flush=True)
-            spark.catalog.clearCache()
-            try:
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
         ok = [(s, t) for s, t in times.items() if t]
         alpha = None
         if len(ok) >= 2:

@@ -13,7 +13,7 @@ dominated), and cka is N·dim² Arrow-matmul-bound with a fixed dim² cell
 aggregate. Emits .scale/audit2_r14.json + a markdown block for
 PLANS.md.
 
-Method per scaling_audit_r13.py: untimed warm-up at the small scale,
+Method per tools/scaling_audit.py: untimed warm-up at the small scale,
 TWO timed reps per scale keeping the MIN, noop sink.
 """
 
