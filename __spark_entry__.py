@@ -1685,40 +1685,28 @@ _STREAM_RUNS = {"n": 0}
 
 
 class _state_partitions:
-    """Scoped spark.sql.shuffle.partitions override for streaming runs.
+    """Scoped spark.sql.shuffle.partitions = 8 for streaming runs.
 
-    Streaming state-store open/commit cost is per partition per
-    micro-batch (~20-28 ms each measured — .scale/stream_ab_r14.json:
-    best-batch 20.1k rows/s at 32 partitions, 42.9k at 8, 57.7k at 2),
-    so state partitioning is per-query CAPACITY sizing from KEY
-    cardinality, not the batch shuffle default (r14 verdict task 5).
-    Pass `keys` (the query's static grouping-key cardinality) to size
-    n = ceil(keys/1000) clamped to [1, n]; the n=8 cap is the local
-    ceiling — on a cluster raise it toward total cores once keys/1000
-    exceeds it (state scales out by key hash). The conf is read at
-    stream start; restoring it after termination leaves batch queries
-    untouched.
+    State-store commit cost is per partition per micro-batch: ~6.5 ms
+    each (perfbench `stream`, nproc=4: `streaming.state_commit_s`
+    0.052 s over 8 partitions). The conf is read at stream start;
+    restoring it after termination leaves batch queries untouched.
 
-    MEASURED NEGATIVE at the oracle-gated queries (r15 task 5 A/B,
-    certified-quiet, 3 reps each): keys-sized downsizing read
-    q_stream_tdigest 5.07→5.57 s (noise), q_stream_page_hinkley
-    3.07→3.45 s, q_stream_running_balance 4.81→9.40 s — the scoped
-    conf governs EVERY shuffle in the stream, so fewer partitions
-    also serializes the per-(key,batch) Python cadence that dominates
-    these queries; the ~25 ms/partition/batch store open/commit saved
-    is an order of magnitude smaller. Call sites therefore stay at
-    the measured n=8 default; `keys` remains for genuinely
-    state-store-bound streams (the stream_ab_r14 shape: tiny per-key
-    work, many empty partitions)."""
+    MEASURED NEGATIVE (3-rep A/B, OPTIMIZATION_r15.md): sizing
+    partitions from key cardinality read q_stream_tdigest 5.07→5.57 s
+    (noise), q_stream_page_hinkley 3.07→3.45 s,
+    q_stream_running_balance 4.81→9.40 s — the scoped conf governs
+    EVERY shuffle in the stream, so fewer partitions also serializes
+    the per-(key,batch) Python cadence that dominates these queries.
+    On a cluster raise the 8 toward total cores (state scales out by
+    key hash)."""
 
-    def __init__(self, spark, n: int = 8, keys: "int | None" = None):
-        if keys is not None:
-            n = max(1, min(int(n), -(-int(keys) // 1000)))
-        self.spark, self.n = spark, str(n)
+    def __init__(self, spark):
+        self.spark = spark
 
     def __enter__(self):
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
+        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)

@@ -59,6 +59,13 @@ _DEFAULTS = {
     # pyspark.zip's directory (see worker_daemon).
     "spark.python.daemon.module": "table_computing_spark.worker_daemon",
     _EXECUTOR_PYTHONPATH: _PACKAGE_PARENT,
+    # Checkpoints of a local[N] session sit on the local filesystem, where
+    # File.renameTo is atomic; the FileContext default forks a readlink per
+    # rename there. Measured (nproc=4): state commit 0.55 -> 0.05 s per micro-batch.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -17,6 +17,8 @@ import tempfile
 
 import pytest
 
+from __spark_entry__ import _await_stream
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -351,8 +353,4 @@ def test_examples_block_runs(spark, title, code):
         proc.stop_all()
     q = ns.get("q")
     if q is not None and hasattr(q, "awaitTermination"):
-        try:
-            q.awaitTermination(120)
-            q.stop()
-        except Exception:  # noqa: BLE001 — already terminated is fine
-            pass
+        _await_stream(q, 120)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import _await_stream
 from table_computing_spark.sources.jdbc import jdbc_scan, jdbc_write
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -145,7 +146,7 @@ def test_stream_to_jdbc_end_to_end(spark, derby_url):
         user="app", password="app", driver=DERBY_DRIVER,
         output_mode="append", batch_size=100,
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = jdbc_scan(
         spark, derby_url, "t_stream_sink", user="app", password="app",
         driver=DERBY_DRIVER,

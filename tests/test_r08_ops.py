@@ -4,6 +4,7 @@ counts, product quantization, point-in-time features, KS drift."""
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import _await_stream
 from table_computing_spark.operators import bitmaps
 from table_computing_spark.sources.parquet import load_table
 
@@ -440,8 +441,7 @@ class TestStreamMaintainDistinct:
         q = matview.stream_maintain_distinct(
             sdf, ["o_orderstatus"], "o_custkey", state, str(tmp_path / "ckpt")
         )
-        q.awaitTermination(120)
-        assert q.exception() is None
+        _await_stream(q, 120)
         st = matview.read_state(spark, state)
         got = {
             r["o_orderstatus"]: r["n_distinct"]
@@ -466,8 +466,7 @@ class TestStreamMaintainDistinct:
             state,
             str(tmp_path / "ckpt"),
         )
-        q2.awaitTermination(120)
-        assert q2.exception() is None
+        _await_stream(q2, 120)
         assert matview._read_pointer(state)["version"] == ptr_before["version"]
 
 
@@ -785,8 +784,7 @@ class TestStreamMaintainTdigest:
         q = matview.stream_maintain_tdigest(
             sdf, "o_totalprice", state, str(tmp_path / "ckpt"), delta=300
         )
-        q.awaitTermination(180)
-        assert q.exception() is None
+        _await_stream(q, 180)
         st = matview.read_state(spark, state)
         qs = [0.1, 0.5, 0.9]
         est = {r["q"]: r["est"] for r in td.tdigest_quantiles(st, qs).collect()}

@@ -13,6 +13,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import _await_stream
+
 
 # --------------------------------------------------------------- k-sample
 
@@ -426,7 +428,7 @@ def test_stream_page_hinkley_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["g"], r["t"]): (r["ph"], r["alarm"])
         for r in spark.table("tc_sph_test").collect()

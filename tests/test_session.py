@@ -25,3 +25,18 @@ def test_generated_classes_survive_a_working_set_over_spark_default(spark):
     compile_loop()
     assert c1 - c0 >= 120
     assert _compiles(spark) == c1
+
+
+def test_checkpoints_use_the_filesystem_manager_with_checksums(spark, tmp_path):
+    # Local checkpoints rename through File.renameTo; the FileContext
+    # default forks a readlink process per rename on this filesystem.
+    jvm = spark.sparkContext._jvm
+    module = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager$"
+    ).getField("MODULE$").get(None)
+    manager = module.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"

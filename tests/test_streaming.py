@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from __spark_entry__ import _await_stream
 from table_computing_spark.operators import windows as tw
 from table_computing_spark.sources import kafka as k
 from table_computing_spark.sources.jdbc import create_table_ddl
@@ -65,25 +66,21 @@ BATCH_2 = [
 def stream_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("stream_src")
     for i, batch in enumerate([BATCH_1, BATCH_2]):
-        p = d / f"batch_{i}.json"
-        with open(p, "w") as f:
-            for event_id, user_id, event_type, value, t_ms in batch:
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": event_id,
-                            "user_id": user_id,
-                            "event_type": event_type,
-                            "value": value,
-                            "t_ms": t_ms,
-                        }
-                    )
-                    + "\n"
-                )
-        # distinct mtimes → deterministic file (= micro-batch) order
-        mt = time.time() + i
-        os.utime(p, (mt, mt))
+        _write_events(d / f"batch_{i}.json", batch, i)
     return str(d)
+
+
+def _write_events(path, batch, bump=0):
+    """One JSON-lines file of EVENT_SCHEMA rows, mtime now + `bump` s:
+    distinct mtimes give a deterministic file (= micro-batch) order."""
+    with open(path, "w") as f:
+        for event_id, user_id, event_type, value, t_ms in batch:
+            f.write(json.dumps({
+                "event_id": event_id, "user_id": user_id,
+                "event_type": event_type, "value": value, "t_ms": t_ms,
+            }) + "\n")
+    mt = time.time() + bump
+    os.utime(path, (mt, mt))
 
 
 def _read_stream(spark, stream_dir):
@@ -110,8 +107,7 @@ def _run_to_table(spark, sdf, name, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    assert q.exception() is None
+    _await_stream(q, 120)
     return spark.table(name)
 
 
@@ -208,15 +204,7 @@ class TestStreamSessionApply:
         batch_3 = [(10, 1, "click", 60.0, 60_000)]
         d = tmp_path_factory.mktemp("session_src")
         for i, batch in enumerate([BATCH_1, BATCH_2, batch_3]):
-            p = d / f"batch_{i}.json"
-            with open(p, "w") as f:
-                for event_id, user_id, event_type, value, t_ms in batch:
-                    f.write(json.dumps({
-                        "event_id": event_id, "user_id": user_id,
-                        "event_type": event_type, "value": value, "t_ms": t_ms,
-                    }) + "\n")
-            mt = time.time() + i
-            os.utime(p, (mt, mt))
+            _write_events(d / f"batch_{i}.json", batch, i)
 
         sdf = _read_stream(spark, str(d)).withColumn(
             "event_time", F.timestamp_millis(F.col("t_ms"))
@@ -270,15 +258,7 @@ class TestStreamSessionApply:
             [(3, 1, "click", 15.0, 2_000), (4, 1, "click", 40.0, 20_000)],
         ]
         for i, batch in enumerate(batches):
-            p = d / f"batch_{i}.json"
-            with open(p, "w") as f:
-                for event_id, user_id, event_type, value, t_ms in batch:
-                    f.write(json.dumps({
-                        "event_id": event_id, "user_id": user_id,
-                        "event_type": event_type, "value": value, "t_ms": t_ms,
-                    }) + "\n")
-            mt = time.time() + i
-            os.utime(p, (mt, mt))
+            _write_events(d / f"batch_{i}.json", batch, i)
 
         sdf = _read_stream(spark, str(d)).withColumn(
             "event_time", F.timestamp_millis(F.col("t_ms"))
@@ -324,15 +304,10 @@ class TestStreamSessionApply:
         never moves past the session end here, so only the
         processing-time timer can fire it."""
         d = tmp_path_factory.mktemp("wallclock_src")
-        with open(d / "batch_0.json", "w") as f:
-            for event_id, user_id, event_type, value, t_ms in [
-                (1, 1, "click", 5.0, 1_000),
-                (2, 1, "view", 7.0, 3_000),
-            ]:
-                f.write(json.dumps({
-                    "event_id": event_id, "user_id": user_id,
-                    "event_type": event_type, "value": value, "t_ms": t_ms,
-                }) + "\n")
+        _write_events(d / "batch_0.json", [
+            (1, 1, "click", 5.0, 1_000),
+            (2, 1, "view", 7.0, 3_000),
+        ])
 
         def transform(key, rows, start_ms, end_ms):
             import pandas as pd
@@ -391,16 +366,11 @@ class TestStreamSessionApply:
         emits only via the timer. transformWithState requires the
         RocksDB state store."""
         d = tmp_path_factory.mktemp("tws_src")
-        with open(d / "batch_0.json", "w") as f:
-            for event_id, user_id, event_type, value, t_ms in [
-                (1, 1, "click", 5.0, 1_000),
-                (2, 1, "view", 7.0, 3_000),
-                (3, 1, "click", 9.0, 60_000),  # >= gap after 3_000 → split
-            ]:
-                f.write(json.dumps({
-                    "event_id": event_id, "user_id": user_id,
-                    "event_type": event_type, "value": value, "t_ms": t_ms,
-                }) + "\n")
+        _write_events(d / "batch_0.json", [
+            (1, 1, "click", 5.0, 1_000),
+            (2, 1, "view", 7.0, 3_000),
+            (3, 1, "click", 9.0, 60_000),  # >= gap after 3_000 → split
+        ])
 
         def transform(key, rows, start_ms, end_ms):
             import pandas as pd
@@ -651,8 +621,7 @@ class TestStreamingFlagship:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        assert q.exception() is None
+        _await_stream(q, 120)
 
         # batch oracle: identical pipeline on the full static frame
         batch = _batch_df(spark).join(
@@ -1057,17 +1026,6 @@ class TestCheckpointRecovery:
         the batch aggregate over BOTH batches, proving window state was
         restored, not recomputed from the source."""
 
-        def write(batch, name, bump):
-            p = tmp_path / "src" / name
-            with open(p, "w") as f:
-                for event_id, user_id, event_type, value, t_ms in batch:
-                    f.write(json.dumps({
-                        "event_id": event_id, "user_id": user_id,
-                        "event_type": event_type, "value": value, "t_ms": t_ms,
-                    }) + "\n")
-            mt = time.time() + bump
-            os.utime(p, (mt, mt))
-
         (tmp_path / "src").mkdir()
         ckpt = str(tmp_path / "ckpt")
 
@@ -1087,16 +1045,15 @@ class TestCheckpointRecovery:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
-            assert q.exception() is None
+            _await_stream(q, 120)
             n_in = sum(p["numInputRows"] for p in q.recentProgress)
             return spark.table(name), n_in
 
-        write(BATCH_1, "b0.json", 0)
+        _write_events(tmp_path / "src" / "b0.json", BATCH_1)
         first, n1 = run("ck_run1")
         assert first.count() > 0 and n1 == len(BATCH_1)
 
-        write(BATCH_2, "b1.json", 1)
+        _write_events(tmp_path / "src" / "b1.json", BATCH_2, 1)
         got, n2 = run("ck_run2")
         # the checkpoint's source offsets must skip b0.json entirely —
         # otherwise this test would pass vacuously by reprocessing
@@ -1109,6 +1066,54 @@ class TestCheckpointRecovery:
         assert _rows(got.select(*expected.columns), "window_start", "event_type") == _rows(
             expected, "window_start", "event_type"
         )
+
+    def test_resume_restores_python_state(self, spark, tmp_path):
+        """Python state (applyInPandasWithState) survives a restart: run
+        2 starts with a new run id, so a fresh state-store provider must
+        read back run 1's delta files through the session's checkpoint
+        manager, checksums verified. Both runs' appended rows together
+        must equal the batch trailing window over both slices. The
+        memory sink refuses to recover in append mode, so rows are
+        collected through foreachBatch."""
+        src = tmp_path / "src"
+        src.mkdir()
+        ckpt = str(tmp_path / "ckpt")
+
+        def run():
+            sdf = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", "1")
+                .json(str(src))
+            )
+            out = stream_over_by_size(
+                sdf, ["user_id"], "t_ms", 3,
+                lambda buf: {"trailing_sum": float(buf["value"].sum())},
+                [T.StructField("trailing_sum", T.DoubleType())],
+            )
+            rows = []
+            q = (
+                out.writeStream.foreachBatch(lambda df, _: rows.extend(df.collect()))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_stream(q, 120)
+            return rows, sum(p["numInputRows"] for p in q.recentProgress)
+
+        _write_events(src / "b0.json", BATCH_1)
+        first, n1 = run()
+        assert n1 == len(BATCH_1)
+
+        _write_events(src / "b1.json", BATCH_2, 1)
+        second, n2 = run()
+        assert n2 == len(BATCH_2)
+
+        expected = tw.over_by_size(
+            Table(_batch_df(spark)), ["user_id"], [F.col("t_ms").asc()], n=3,
+            trailing_sum=F.sum("value"),
+        ).df
+        got = sorted((r["event_id"], r["trailing_sum"]) for r in first + second)
+        assert got == _rows(expected.select("event_id", "trailing_sum"), "event_id")
 
 
 def test_streaming_cms_equals_batch_sketch(spark, stream_dir):
@@ -1145,8 +1150,7 @@ def test_stream_maintain_agg_equals_batch_groupby(spark, stream_dir, tmp_path):
         state_dir=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
-    assert q.exception() is None
+    _await_stream(q, 120)
 
     got_df = matview.read_state(spark, str(tmp_path / "state"))
     want_df = incremental.agg_state(_batch_df(spark), ["user_id"], measures)
@@ -1166,8 +1170,7 @@ def test_stream_maintain_agg_equals_batch_groupby(spark, stream_dir, tmp_path):
         state_dir=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
-    q2.awaitTermination(120)
-    assert q2.exception() is None
+    _await_stream(q2, 120)
     ptr_after = matview._read_pointer(str(tmp_path / "state"))
     assert ptr_after == ptr_before
     got2 = {
@@ -1274,8 +1277,7 @@ def test_stream_running_balance_equals_batch_fold(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    assert q.exception() is None
+    _await_stream(q, 300)
     rows = spark.table(name).collect()
     # last emission per key = the one with the highest n_events
     got = {}
@@ -1325,8 +1327,7 @@ def test_stream_maintain_crash_recovery(spark, tmp_path):
         q = matview.stream_maintain_agg(
             sdf, ["user_id"], measures, state_dir=state, checkpoint_dir=ckpt
         )
-        q.awaitTermination(120)
-        assert q.exception() is None
+        _await_stream(q, 120)
 
     for i in range(3):
         add_file(i)
