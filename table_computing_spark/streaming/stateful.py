@@ -11,9 +11,12 @@ behind a `rehash`; here the shuffle is the groupBy and the buffer lives
 in the state store (checkpointable, fault-tolerant — strictly more than
 the reference, which loses state on crash; README.md:141-152).
 
-State is the trailing buffer serialized as a JSON string — schema-stable
-across arbitrary input columns, and bounded: N rows (by-size) or one
-time-range of rows (by-duration) per key.
+State is the trailing buffer as one Arrow IPC stream in a binary
+field (`_dump_buf` / `_load_buf`) — schema-stable across arbitrary input
+columns, exact (every value, null and timestamp nanosecond comes back as
+it went in), and bounded: N rows (by-size) or one time-range of rows
+(by-duration) per key. The raw-row session transforms keep their open
+session the same way.
 
 Batch equivalents with identical semantics: operators/windows.py
 over_by_size / over_by_duration (WindowSpec frames) — the correctness
@@ -22,13 +25,13 @@ oracle for these functions (tests/test_streaming.py compares both).
 
 from __future__ import annotations
 
-import io
-import json
 import math
 from collections.abc import Callable, Sequence
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -50,6 +53,31 @@ class VectorizedRowAgg:
         self.fn = fn
 
 
+def _dump_buf(df: pd.DataFrame) -> bytes:
+    """A buffer of rows as the value of a BinaryType state field: one
+    Arrow IPC stream, with neither the index nor the pandas schema
+    metadata (which would double a small buffer's size)."""
+    table = pa.Table.from_pandas(df, preserve_index=False).replace_schema_metadata(None)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+def _load_buf(b: bytes) -> pd.DataFrame:
+    """Inverse of `_dump_buf`, on a fresh RangeIndex."""
+    return pa.ipc.open_stream(b).read_all().to_pandas()
+
+
+_BUF_SCHEMA = T.StructType([T.StructField("buf", T.BinaryType())])
+
+
+def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame:
+    # pyspark mostly hands a key's rows over as one chunk, which
+    # pd.concat would still copy
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+
 def _run_buffered(
     pdfs: Iterator[pd.DataFrame],
     state,
@@ -58,11 +86,8 @@ def _run_buffered(
     added_cols: list[str],
     keep_fn: Callable[[pd.DataFrame], pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        buf = pd.read_json(io.StringIO(state.get[0]), orient="table")
-    else:
-        buf = None
-    batch = pd.concat(list(pdfs), ignore_index=True)
+    buf = _load_buf(state.get[0]) if state.exists else None
+    batch = _concat(list(pdfs))
     batch = batch.sort_values(order_col, kind="mergesort").reset_index(drop=True)
     history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
     n_old = 0 if buf is None else len(buf)
@@ -81,7 +106,7 @@ def _run_buffered(
         for c in added_cols:
             batch[c] = out_rows[c]
     keep = keep_fn(history)
-    state.update((keep.to_json(orient="table"),))
+    state.update((_dump_buf(keep),))
     yield batch
 
 
@@ -101,7 +126,6 @@ def stream_over_by_size(
     table/SlideTableByColumn.java:36-44; feed through a watermark/sorted
     source for the same guarantee)."""
     out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
     added = [f.name for f in added_fields]
 
     def fn(key, pdfs, state):
@@ -110,7 +134,7 @@ def stream_over_by_size(
         )
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+        fn, out_schema, _BUF_SCHEMA, "append", "NoTimeout"
     )
 
 
@@ -126,7 +150,6 @@ def stream_over_by_duration(
     CURRENT per key over an epoch-ms column (ref
     OverWindowByDuration.java:63-92 — buffer [t - size + 1, t])."""
     out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
     added = [f.name for f in added_fields]
 
     def keep(h: pd.DataFrame) -> pd.DataFrame:
@@ -137,7 +160,7 @@ def stream_over_by_duration(
         yield from _run_buffered(pdfs, state, time_col_ms, agg_fn, added, keep)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+        fn, out_schema, _BUF_SCHEMA, "append", "NoTimeout"
     )
 
 
@@ -146,6 +169,46 @@ SessionTransform = Callable[[tuple, pd.DataFrame, int, int], pd.DataFrame]
 the TimeWindowFunction analog (function/TimeWindowFunction.java:7-12):
 the raw-row session variant that plain `session_window` aggregation
 cannot express."""
+
+
+def _ms(series: pd.Series) -> pd.Series:
+    """Epoch ms of a TimestampType (datetime64[ns]) or epoch-ms column."""
+    if str(series.dtype).startswith("datetime64"):
+        return series.astype("int64") // 1_000_000
+    return series.astype("int64")
+
+
+def _with_buf(buf: pd.DataFrame | None, pdfs) -> list[pd.DataFrame]:
+    return ([] if buf is None else [buf]) + list(pdfs)
+
+
+def _sessions(
+    frames: list[pd.DataFrame], tcol: str, gap_ms: int
+) -> list[tuple[pd.DataFrame, int, int]]:
+    """Concatenate `frames` (a key's buffered open session first, then
+    this batch's rows), stably re-sort on `tcol` — a late row can
+    precede buffered ones, and gaps and bounds need monotonic times —
+    and cut at every gap >= gap_ms. Returns (rows, start_ms, end_ms)
+    per session with the reference's bounds [firstTime, lastTime + 1);
+    the last session is the still-open tail."""
+    if not frames:
+        return []
+    history = _concat(frames).sort_values(tcol, kind="mergesort").reset_index(drop=True)
+    if not len(history):
+        return []
+    t_ms = _ms(history[tcol]).to_numpy()
+    cuts = [0, *(np.flatnonzero(np.diff(t_ms) >= gap_ms) + 1).tolist(), len(t_ms)]
+    return [
+        (history.iloc[a:b], int(t_ms[a]), int(t_ms[b - 1]) + 1)
+        for a, b in zip(cuts, cuts[1:])
+    ]
+
+
+def _fire(key, transform: SessionTransform, sessions) -> Iterator[pd.DataFrame]:
+    for rows, start_ms, end_ms in sessions:
+        out = transform(key, rows, start_ms, end_ms)
+        if out is not None and len(out):
+            yield out
 
 
 def stream_session_apply(
@@ -177,54 +240,23 @@ def stream_session_apply(
     The epoch-ms time used for gap logic is derived from it.
     """
     sdf = sdf.withWatermark(event_time_col, watermark)
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
     tcol = event_time_col
 
     def fn(key, pdfs, state):
-        import pandas as pd  # noqa: F811 — worker-side import
-
-        if state.exists:
-            buf = pd.read_json(io.StringIO(state.get[0]), orient="table")
-        else:
-            buf = None
-
+        buf = _load_buf(state.get[0]) if state.exists else None
         if state.hasTimedOut:
             # watermark passed lastTime + gap → flush the open session
-            if buf is not None and len(buf):
-                t_ms = (buf[tcol].astype("int64") // 1_000_000).tolist()
-                out = transform(key, buf, t_ms[0], t_ms[-1] + 1)
-                state.remove()
-                if out is not None and len(out):
-                    yield out
-            else:
-                state.remove()
+            state.remove()
+            yield from _fire(key, transform, _sessions(_with_buf(buf, ()), tcol, gap_ms))
             return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-        history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
-        # a within-watermark late row can precede buffered rows; re-sort
-        # the full history (stable) so gaps, bounds, and the timeout
-        # timestamp (t_ms[-1]) are computed on monotonic times
-        history = history.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-        t_ms = (history[tcol].astype("int64") // 1_000_000).to_numpy()
-
-        # split history into sessions at gaps >= gap_ms
-        start = 0
-        for i in range(1, len(history)):
-            if t_ms[i] - t_ms[i - 1] >= gap_ms:
-                rows = history.iloc[start:i]
-                out = transform(key, rows, int(t_ms[start]), int(t_ms[i - 1]) + 1)
-                if out is not None and len(out):
-                    yield out
-                start = i
-        open_rows = history.iloc[start:].reset_index(drop=True)
-        state.update((open_rows.to_json(orient="table"),))
+        *closed, (open_rows, _, end) = _sessions(_with_buf(buf, pdfs), tcol, gap_ms)
+        yield from _fire(key, transform, closed)
+        state.update((_dump_buf(open_rows),))
         # flush when the watermark passes lastTime + gap
-        state.setTimeoutTimestamp(int(t_ms[-1]) + gap_ms)
+        state.setTimeoutTimestamp(end - 1 + gap_ms)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", "EventTimeTimeout"
+        fn, output_schema, _BUF_SCHEMA, "append", "EventTimeTimeout"
     )
 
 
@@ -259,55 +291,23 @@ def stream_session_wallclock(
     `time_col` may be epoch-ms BIGINT or TimestampType; no watermark is
     required (nothing here depends on event-time progress)."""
     idle = gap_ms if idle_flush_ms is None else idle_flush_ms
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
     tcol = time_col
 
-    def _ms(series: "pd.Series") -> "pd.Series":
-        if str(series.dtype).startswith("datetime64"):
-            return series.astype("int64") // 1_000_000
-        return series.astype("int64")
-
     def fn(key, pdfs, state):
-        import pandas as pd  # noqa: F811 — worker-side import
-
-        buf = pd.read_json(io.StringIO(state.get[0]), orient="table") if state.exists else None
-
+        buf = _load_buf(state.get[0]) if state.exists else None
         if state.hasTimedOut:
             # wall clock went silent past the idle horizon → flush the
             # open session with no new data (the M4 behavior)
-            if buf is not None and len(buf):
-                t_ms = _ms(buf[tcol]).tolist()
-                out = transform(key, buf, int(t_ms[0]), int(t_ms[-1]) + 1)
-                state.remove()
-                if out is not None and len(out):
-                    yield out
-            else:
-                state.remove()
+            state.remove()
+            yield from _fire(key, transform, _sessions(_with_buf(buf, ()), tcol, gap_ms))
             return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-        history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
-        # a cross-batch late row can land before buffered rows — re-sort
-        # the full history (stable) so gap splits and [first, last+1)
-        # bounds stay correct, matching single-batch behavior
-        history = history.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-        t_ms = _ms(history[tcol]).to_numpy()
-
-        start = 0
-        for i in range(1, len(history)):
-            if t_ms[i] - t_ms[i - 1] >= gap_ms:
-                rows = history.iloc[start:i]
-                out = transform(key, rows, int(t_ms[start]), int(t_ms[i - 1]) + 1)
-                if out is not None and len(out):
-                    yield out
-                start = i
-        open_rows = history.iloc[start:].reset_index(drop=True)
-        state.update((open_rows.to_json(orient="table"),))
+        *closed, (open_rows, _, _) = _sessions(_with_buf(buf, pdfs), tcol, gap_ms)
+        yield from _fire(key, transform, closed)
+        state.update((_dump_buf(open_rows),))
         state.setTimeoutDuration(idle)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", "ProcessingTimeTimeout"
+        fn, output_schema, _BUF_SCHEMA, "append", "ProcessingTimeTimeout"
     )
 
 
@@ -329,8 +329,8 @@ def stream_session_tws(
 
     vs the applyInPandasWithState variant: timers are first-class (one
     per key, re-registered on every batch; stale firings are filtered by
-    the deadline kept in state), state is typed instead of a
-    single-string convention, and the state store must be RocksDB
+    the deadline kept in state), the deadline sits next to the buffer
+    in one typed ValueState, and the state store must be RocksDB
     (transformWithState's backend requirement — set
     spark.sql.streaming.stateStore.providerClass accordingly).
 
@@ -366,13 +366,8 @@ def make_session_processor(time_col, gap_ms, idle, transform):
 
     tcol = time_col
     state_schema = T.StructType(
-        [T.StructField("buf", T.StringType()), T.StructField("deadline", T.LongType())]
+        [T.StructField("buf", T.BinaryType()), T.StructField("deadline", T.LongType())]
     )
-
-    def _ms(series: "pd.Series") -> "pd.Series":
-        if str(series.dtype).startswith("datetime64"):
-            return series.astype("int64") // 1_000_000
-        return series.astype("int64")
 
     class _SessionProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -380,48 +375,24 @@ def make_session_processor(time_col, gap_ms, idle, transform):
             self._state = handle.getValueState("session", state_schema)
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd  # noqa: F811 — worker-side import
-
-            existing = self._state.get() if self._state.exists() else None
-            buf = pd.read_json(io.StringIO(existing[0]), orient="table") if existing else None
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-            history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
-            # re-sort the concatenated history: a cross-batch late row
-            # must not leave t_ms non-monotonic (see wallclock variant)
-            history = history.sort_values(tcol, kind="mergesort").reset_index(drop=True)
-            t_ms = _ms(history[tcol]).to_numpy()
-
-            start = 0
-            for i in range(1, len(history)):
-                if t_ms[i] - t_ms[i - 1] >= gap_ms:
-                    out = transform(key, history.iloc[start:i], int(t_ms[start]), int(t_ms[i - 1]) + 1)
-                    if out is not None and len(out):
-                        yield out
-                    start = i
-            open_rows = history.iloc[start:].reset_index(drop=True)
+            buf = _load_buf(self._state.get()[0]) if self._state.exists() else None
+            *closed, (open_rows, _, _) = _sessions(_with_buf(buf, rows), tcol, gap_ms)
+            yield from _fire(key, transform, closed)
             deadline = timer_values.getCurrentProcessingTimeInMs() + idle
-            self._state.update((open_rows.to_json(orient="table"), deadline))
+            self._state.update((_dump_buf(open_rows), deadline))
             # one live timer per key: re-arm on every batch; firings of
             # superseded timers are ignored against the stored deadline
             self._handle.registerTimer(deadline)
 
         def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            import pandas as pd  # noqa: F811 — worker-side import
-
             self._handle.deleteTimer(expired_timer_info.getExpiryTimeInMs())
             if not self._state.exists():
                 return
-            buf_json, deadline = self._state.get()
+            buf, deadline = self._state.get()
             if expired_timer_info.getExpiryTimeInMs() < deadline:
                 return  # superseded by a newer batch's re-arm
-            buf = pd.read_json(io.StringIO(buf_json), orient="table")
             self._state.clear()
-            if len(buf):
-                t_ms = _ms(buf[tcol]).tolist()
-                out = transform(key, buf, int(t_ms[0]), int(t_ms[-1]) + 1)
-                if out is not None and len(out):
-                    yield out
+            yield from _fire(key, transform, _sessions([_load_buf(buf)], tcol, gap_ms))
 
         def close(self) -> None:
             pass
@@ -461,7 +432,7 @@ def stream_session_capped(
     def transform(key, rows, start_ms, end_ms):
         import pandas as pd
 
-        t = (rows[event_time_col].astype("int64") // 1_000_000).to_numpy()
+        t = _ms(rows[event_time_col]).to_numpy()
         sub = (t - t[0]) // cap_ms
         starts = {s: int(t[sub == s].min()) for s in set(sub.tolist())}
         data = {k: [key[i]] * len(t) for i, k in enumerate(keys)}
