@@ -16,6 +16,7 @@ Design notes for oracle parity:
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 from table_computing_spark import functions as tcf
 from table_computing_spark.operators import windows as tw
-from table_computing_spark.sources.parquet import load_table
+from table_computing_spark.sources.parquet import load_table, stream_df
 
 # ---------------------------------------------------------------------------
 # flagship — the reference's Top100 pipeline shape (Top100Test.java:147-182):
@@ -78,9 +79,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str):
 
 
 def _ts_ms(ev_schema) -> F.Column:
-    """Epoch-ms BIGINT from the RAW events `ts` column, whatever
-    physical type the generator wrote (the streaming queries read the
-    raw parquet schema, bypassing sources/parquet.load_df):
+    """Epoch-ms BIGINT from the RAW events `ts` column of a
+    sources.parquet.stream_df schema:
       bigint        → epoch-ns under nanosAsLong; integer `div` keeps
                       long arithmetic (float `/` corrupts µs).
       timestamp*    → native timestamp[us]; NTZ→LTZ cast is the
@@ -914,7 +914,6 @@ def _ensure_csv_ingest_fixture() -> str:
     quotes, or blank lines (the oracle re-parses raw lines with
     delim=tab + quote off)."""
     import os
-    import tempfile
 
     if os.path.exists(_CSV_INGEST_PATH):
         return _CSV_INGEST_PATH
@@ -979,7 +978,6 @@ def _ensure_json_ingest_fixture() -> str:
     bigint (same), raw syntax garbage (all-null + quarantine), and
     numeric name (coerced to string, NOT corrupt)."""
     import os
-    import tempfile
 
     if os.path.exists(_JSON_INGEST_PATH):
         return _JSON_INGEST_PATH
@@ -1506,8 +1504,6 @@ def q_stream_running_balance(spark, sf_dir):
     key must hash-match the recursive-CTE replay of the WHOLE history
     — the same oracle as the batch fold. Tail slot for the r08 window.
     (New r07.)"""
-    import tempfile
-
     from table_computing_spark.streaming.stateful import stream_running_balance
 
     # 1/10 of the parts: applyInPandasWithState pays one Python
@@ -1525,19 +1521,11 @@ def q_stream_running_balance(spark, sf_dir):
         .otherwise(-F.col("l_quantity"))
         .alias("delta"),
     )
-    base = tempfile.mkdtemp(prefix="tc_srb_")
-    src = os.path.join(base, "src")
     # fixed mid-corpus cut (this generator ships 1995-2002 dates):
     # two real micro-batches prove the cross-batch state carry without
     # paying a min/max scan or a third batch cycle
     cut = 899_856_000_000  # 1998-07-08 UTC in epoch ms
-    for cond in (F.col("ms") <= cut, F.col("ms") > cut):
-        li.where(cond).coalesce(1).write.mode("append").parquet(src)
-    sdf = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    _, sdf = _replay_slices(li, [F.col("ms") <= cut, F.col("ms") > cut], "tc_srb_")
     out = stream_running_balance(
         sdf, ["l_partkey"], ["ms", "l_orderkey", "l_linenumber"], "delta"
     )
@@ -1729,6 +1717,30 @@ def _run_stream_to_df(spark, sdf, mode="complete"):
     return spark.table(name)
 
 
+def _replay_slices(df, conds, prefix):
+    """`df` replayed as a parquet file stream, one micro-batch per
+    condition, in order. Returns (base, sdf): a fresh temp dir (the
+    slices sit in `base/deltas`; callers put state and checkpoints
+    beside them) and the maxFilesPerTrigger=1 stream.
+
+    Each slice is its own SEQUENTIAL coalesce(1) append, because file
+    mtimes are the file source's batch order. A single
+    repartitionByRange write does NOT keep that order: all parts share
+    one mtime, and the source's tie-break processed them out of order
+    (measured on q_stream_page_hinkley: batch 3 first, state extended
+    from the wrong end)."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    src = os.path.join(base, "deltas")
+    for cond in conds:
+        df.where(cond).coalesce(1).write.mode("append").parquet(src)
+    sdf = (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    return base, sdf
+
+
 def q_streaming_tumble(spark, sf_dir):
     """REAL Structured Streaming execution under the oracle gate: the
     events table replayed as a parquet file stream through a
@@ -1736,17 +1748,8 @@ def q_streaming_tumble(spark, sf_dir):
     final state must hash-match the same SQL as the batch tumble."""
     from table_computing_spark.streaming.windows import stream_tumble
 
-    # raw parquet schema (the loader's normalized TimestampType schema
-    # would not match the files); _ts_ms dispatches on the actual dtype
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = sdf.withColumn("t_ms", _ts_ms(ev_schema))
+    sdf = stream_df(spark, sf_dir, "events")
+    sdf = sdf.withColumn("t_ms", _ts_ms(sdf.schema))
     out = stream_tumble(
         sdf, "t_ms", "1 hour", ["event_type"],
         watermark="10 seconds",
@@ -1763,17 +1766,8 @@ def q_streaming_session(spark, sf_dir):
     computation."""
     from table_computing_spark.streaming.windows import stream_session
 
-    # raw parquet schema (the loader's normalized TimestampType schema
-    # would not match the files); _ts_ms dispatches on the actual dtype
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = sdf.withColumn("t_ms", _ts_ms(ev_schema))
+    sdf = stream_df(spark, sf_dir, "events")
+    sdf = sdf.withColumn("t_ms", _ts_ms(sdf.schema))
     out = stream_session(
         sdf, "t_ms", "30 minutes", ["user_id"],
         watermark="10 seconds",
@@ -1789,17 +1783,8 @@ def q_streaming_slide(spark, sf_dir):
     gate — final state hash-matches the batch hopping-window SQL."""
     from table_computing_spark.streaming.windows import stream_slide
 
-    # raw parquet schema (the loader's normalized TimestampType schema
-    # would not match the files); _ts_ms dispatches on the actual dtype
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = sdf.withColumn("t_ms", _ts_ms(ev_schema))
+    sdf = stream_df(spark, sf_dir, "events")
+    sdf = sdf.withColumn("t_ms", _ts_ms(sdf.schema))
     out = stream_slide(
         sdf, "t_ms", "1 hour", "30 minutes", ["event_type"],
         watermark="10 seconds",
@@ -1817,11 +1802,8 @@ def q_stream_dedup(spark, sf_dir):
     fingerprint is projected."""
     from table_computing_spark.streaming.windows import stream_dedup_exact
 
-    doc_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     sdf = (
-        spark.readStream.schema(doc_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "documents")
         # +1s offset: epoch-0 event time is not strictly after the initial
         # watermark and the row would be silently dropped as late
         .withColumn("ts", F.timestamp_millis((F.col("doc_id") + 1) * 1000))
@@ -1842,13 +1824,8 @@ def q_stream_over(spark, sf_dir):
 
     from table_computing_spark.streaming.stateful import stream_over_by_size
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "events")
         .select("event_id", "user_id", "ts", "value")
     )
 
@@ -1897,20 +1874,8 @@ def q_stream_over_duration(spark, sf_dir):
         stream_over_by_duration,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "event_id",
-            "user_id",
-            _ts_ms(ev_schema).alias("t_ms"),
-            "value",
-        )
-    )
+    ev = stream_df(spark, sf_dir, "events")
+    sdf = ev.select("event_id", "user_id", _ts_ms(ev.schema).alias("t_ms"), "value")
 
     def trailing(history: "pd.DataFrame", n_old: int) -> "pd.DataFrame":
         import numpy as np
@@ -1963,11 +1928,8 @@ def q_stream_minhash(spark, sf_dir):
     from table_computing_spark.operators import dedup as bdedup
     from table_computing_spark.streaming.dedup import stream_minhash_pairs
 
-    doc_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     sdf = (
-        spark.readStream.schema(doc_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "documents")
         # +1s offset: epoch-0 event time is not strictly after the initial
         # watermark and the row would be silently dropped as late.
         # 10 ms spacing keeps the WHOLE corpus inside the 1 h pair-state
@@ -2017,15 +1979,8 @@ def q_stream_enrich(spark, sf_dir):
 
     dim = DimensionTable(load_dim, refresh_interval_s=3600.0)
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", _ts_ms(ev_schema).alias("t_ms"), "value")
-    )
+    ev = stream_df(spark, sf_dir, "events")
+    sdf = ev.select("user_id", _ts_ms(ev.schema).alias("t_ms"), "value")
     enriched = dim.join(sdf, on=[("user_id", "c_custkey")], how="left")
     out = stream_tumble(
         enriched, "t_ms", "1 hour", ["n_name"],
@@ -2046,19 +2001,12 @@ def q_stream_interval_join(spark, sf_dir):
     correlation at all (dimension snapshots only)."""
     from table_computing_spark.streaming.joins import interval_join
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    base = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.timestamp_millis(_ts_ms(ev_schema)).alias("t"),
-        )
+    ev = stream_df(spark, sf_dir, "events")
+    base = ev.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.timestamp_millis(_ts_ms(ev.schema)).alias("t"),
     )
     clicks = base.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -2092,9 +2040,6 @@ def q_stream_anomaly(spark, sf_dir):
     and only |z| > 2.5 outliers are emitted — a completely STATELESS
     streaming pipeline (no watermark, no state store): per-row
     broadcast join + filter, the minimal-latency shape for alerting."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
     ev_batch = _t(spark, sf_dir, "events").df.select(
         "event_type", F.round(F.col("value") * 100).cast("decimal(38,0)").alias("vc")
     )
@@ -2111,11 +2056,8 @@ def q_stream_anomaly(spark, sf_dir):
         (F.sqrt(var_num) / n_d).alias("sd_c"),
     )
 
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "events")
         .select(
             "event_id", "event_type",
             F.round(F.col("value") * 100).cast("decimal(38,0)").alias("vc"),
@@ -2144,16 +2086,11 @@ def q_stream_ivf_assign(spark, sf_dir):
     under the value-hash oracle)."""
     from table_computing_spark.operators.similarity import ivf_assign
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _t(spark, sf_dir, "embeddings").df
     seeds = emb.orderBy("vec_id").limit(16).select("embedding").collect()
     centroids = [list(r["embedding"]) for r in seeds]
 
-    sdf = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-    assigned = ivf_assign(sdf, centroids)
+    assigned = ivf_assign(stream_df(spark, sf_dir, "embeddings"), centroids)
     out = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum(F.round(F.col("cos_sim") * 1000000).cast("long")).alias("sum_sim_e6"),
@@ -3123,11 +3060,8 @@ def q_stream_curation(spark, sf_dir):
     from table_computing_spark.operators import text as tx
     from table_computing_spark.streaming.windows import stream_dedup_exact
 
-    doc_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     sdf = (
-        spark.readStream.schema(doc_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "documents")
         .withColumn("ts", F.timestamp_millis((F.col("doc_id") + 1) * 1000))
     )
     kept = (
@@ -3480,9 +3414,6 @@ def q_stream_drift(spark, sf_dir):
     same engine-exact PSI report as the batch operator."""
     from table_computing_spark.operators import drift
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
     o = _t(spark, sf_dir, "orders").df
     baseline = drift.bucket_counts(
         o.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -3491,11 +3422,8 @@ def q_stream_drift(spark, sf_dir):
         "x", 0.0, 600_000.0, 10, "n_old",
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
     sdf = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 2 == 1)
         .select((F.col("o_totalprice") * 1.15).alias("x"))
     )
@@ -3734,15 +3662,8 @@ def q_stream_ohlc(spark, sf_dir):
     the batch bars."""
     from table_computing_spark.streaming.windows import stream_tumble
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = sdf.withColumn("t_ms", _ts_ms(ev_schema))
+    sdf = stream_df(spark, sf_dir, "events")
+    sdf = sdf.withColumn("t_ms", _ts_ms(sdf.schema))
     ordkey = F.struct("t_ms", "event_id")
     out = stream_tumble(
         sdf, "t_ms", "1 hour", ["event_type"],
@@ -4199,23 +4120,13 @@ def q_stream_matview(spark, sf_dir):
     DataFrame. Oracle: the definition of MV correctness — the full
     GROUP BY over everything ingested. DECIMAL measures make the merge
     order irrelevant bit-for-bit."""
-    import tempfile
-
     from table_computing_spark.streaming import matview
 
     o = _t(spark, sf_dir, "orders").df.select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="tc_matview_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_matview_"
     )
     measures = {"revenue": F.col("o_totalprice").cast("decimal(30,4)")}
     with _state_partitions(spark):
@@ -5029,24 +4940,14 @@ def q_stream_bitmap_distinct(spark, sf_dir):
     COUNT(DISTINCT) over everything ingested; bit-OR is set union, so
     the stream answer carries NO error bar, unlike the HLL twin
     (q_maintain_distinct). (New r08, r09 window head.)"""
-    import tempfile
-
     from table_computing_spark.operators import bitmaps
     from table_computing_spark.streaming import matview
 
     o = _t(spark, sf_dir, "orders").df.select(
         "o_orderkey", "o_orderpriority", "o_custkey"
     )
-    base = tempfile.mkdtemp(prefix="tc_bmdist_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_bmdist_"
     )
     with _state_partitions(spark):
         q = matview.stream_maintain_distinct(
@@ -5154,23 +5055,13 @@ def q_stream_tdigest(spark, sf_dir):
     rank band (measured rank error ≤ 0.12% at the gate scale — digests
     compose associatively, so the bound survives any number of batch
     merges). (New r08, r09 window head.)"""
-    import tempfile
-
     from table_computing_spark.operators import tdigest as td
     from table_computing_spark.operators.quantiles import exact_quantiles
     from table_computing_spark.streaming import matview
 
     o = _t(spark, sf_dir, "orders").df.select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="tc_tdstream_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_tdstream_"
     )
     with _state_partitions(spark):
         q = matview.stream_maintain_tdigest(
@@ -5532,23 +5423,13 @@ def q_stream_fingerprint(spark, sf_dir):
     fingerprint over everything ingested — the replica-verification
     primitive maintained INCREMENTALLY, historical rows never
     rescanned. (New r09.)"""
-    import tempfile
-
     from table_computing_spark.operators.fingerprint import row_hash
     from table_computing_spark.streaming import matview
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     o = _t(spark, sf_dir, "orders").df.select("o_orderstatus", *cols)
-    base = tempfile.mkdtemp(prefix="tc_sfp_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_sfp_"
     )
     measures = {"hsum": row_hash(cols).cast("decimal(28,0)")}
     with _state_partitions(spark):
@@ -5616,24 +5497,14 @@ def q_stream_kmv(spark, sf_dir):
     exact same k-min hashes and estimate. Completes the maintained-
     state family: sums, bitmaps, t-digests, hash-sums, and now
     set-operation sketches. (New r09.)"""
-    import tempfile
-
     from table_computing_spark.operators import kmv
     from table_computing_spark.streaming import matview
 
     ev = _t(spark, sf_dir, "events").df.select(
         "event_type", "user_id", "event_id"
     )
-    base = tempfile.mkdtemp(prefix="tc_skmv_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        ev, [F.col("event_id") % 3 == i for i in range(3)], "tc_skmv_"
     )
     with _state_partitions(spark):
         q = matview.stream_maintain_kmv(
@@ -6253,8 +6124,6 @@ def q_stream_page_hinkley(spark, sf_dir):
     extends across micro-batches and the union of emitted rows equals
     the batch recursion row-for-row (the q_stream_ohlc gate shape).
     (New r12b.)"""
-    import tempfile
-
     from table_computing_spark.streaming.stateful import stream_page_hinkley
 
     ev = _t(spark, sf_dir, "events").df.select(
@@ -6262,27 +6131,18 @@ def q_stream_page_hinkley(spark, sf_dir):
         "event_id",
         F.round(F.col("value") * 1000).cast("long").alias("mval"),
     )
-    src = tempfile.mkdtemp(prefix="tc_sph_")
-    # range-sliced replay via SEQUENTIAL appends (the
-    # q_stream_running_balance pattern): one range per write, so file
-    # mtimes — the file source's batch order — match event_id order and
-    # each key's rows arrive nondecreasing across micro-batches (the
-    # stream_over_by_size ordering contract). A single
-    # repartitionByRange write does NOT guarantee this: all parts share
-    # one mtime and the source's tie-break processed them out of order
-    # (measured: batch 3 first, PH state extended from the wrong end).
+    # event_id-ordered slices, so each key's rows arrive nondecreasing
+    # across micro-batches (the stream_over_by_size ordering contract)
     n = ev.count()  # bounded driver scalar (the bm25 n_docs discipline)
     cuts = (n // 3, 2 * n // 3)
-    for cond in (
-        F.col("event_id") < cuts[0],
-        (F.col("event_id") >= cuts[0]) & (F.col("event_id") < cuts[1]),
-        F.col("event_id") >= cuts[1],
-    ):
-        ev.where(cond).coalesce(1).write.mode("append").parquet(src)
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    _, sdf = _replay_slices(
+        ev,
+        [
+            F.col("event_id") < cuts[0],
+            (F.col("event_id") >= cuts[0]) & (F.col("event_id") < cuts[1]),
+            F.col("event_id") >= cuts[1],
+        ],
+        "tc_sph_",
     )
     out = stream_page_hinkley(
         sdf, ["event_type"], "event_id", "mval", delta=0.0, lam=500.0
@@ -6352,8 +6212,6 @@ def q_stream_sprt(spark, sf_dir):
     was first touched (that is batch q_sprt's job); the monitor
     answers 'should we stop now'. Oracle: the full-batch counts
     through the same formula — MV correctness. (New r12e.)"""
-    import tempfile
-
     from table_computing_spark.operators.drift import sprt_from_counts
     from table_computing_spark.streaming import matview
 
@@ -6362,17 +6220,10 @@ def q_stream_sprt(spark, sf_dir):
         (F.col("o_orderstatus") == "F").cast("long").alias("y"),
         "o_orderkey",
     )
-    base = tempfile.mkdtemp(prefix="tc_ssprt_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    ).select("arm", "y")
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_ssprt_"
+    )
+    sdf = sdf.select("arm", "y")
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
             sdf,
@@ -6534,22 +6385,12 @@ def q_stream_topk(spark, sf_dir):
     leaderboard question every engagement pipeline serves. Oracle: the
     full batch GROUP BY + rank — MV correctness by definition.
     (New r10.)"""
-    import tempfile
-
     from pyspark.sql import Window
     from table_computing_spark.streaming import matview
 
     ev = _t(spark, sf_dir, "events").df.select("event_type", "user_id", "event_id")
-    base = tempfile.mkdtemp(prefix="tc_stopk_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    base, sdf = _replay_slices(
+        ev, [F.col("event_id") % 3 == i for i in range(3)], "tc_stopk_"
     )
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
@@ -7108,8 +6949,6 @@ def q_stream_eval(spark, sf_dir):
     q_stream_topk maintained/at-read decomposition applied to model
     monitoring. Oracle: the full-batch report — MV correctness by
     definition. (New r11b.)"""
-    import tempfile
-
     from table_computing_spark.operators.evaluation import (
         classification_report_from_counts,
     )
@@ -7123,17 +6962,10 @@ def q_stream_eval(spark, sf_dir):
         .alias("pred"),
         F.col("o_orderkey"),
     )
-    base = tempfile.mkdtemp(prefix="tc_seval_")
-    src = os.path.join(base, "deltas")
-    for i in range(3):
-        o.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sdf = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    ).select("label", "pred")
+    base, sdf = _replay_slices(
+        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_seval_"
+    )
+    sdf = sdf.select("label", "pred")
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
             sdf,
@@ -7372,9 +7204,6 @@ def q_stream_wasserstein(spark, sf_dir):
     matview MV-correctness convention). (New r13.)"""
     from table_computing_spark.operators.drift import wasserstein_from_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
     li = _t(spark, sf_dir, "lineitem").df
     baseline = (
         li.filter(F.col("l_returnflag") == "R")
@@ -7383,11 +7212,8 @@ def q_stream_wasserstein(spark, sf_dir):
         .groupBy("__v")
         .agg(F.count(F.lit(1)).alias("__no"))
     )
-    schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
     sdf = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
+        stream_df(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "A")
         .select(F.col("l_quantity").cast("long").alias("__v"))
         .filter(F.col("__v").isNotNull())
@@ -7512,455 +7338,48 @@ def q_kuiper(spark, sf_dir):
     )
 
 
+# Registry head, in order: the driver's correctness gate hashes only the
+# FIRST 50 keys. The r14 window is the 17 r13 post-window queries (zero
+# driver evidence), the r06 spill q_union_distinct and the 32
+# alphabetically-first r07-stale rows (pinned by
+# tests/test_queries.py::test_window_rotation_discipline); the remaining
+# 18 r07 rows follow and head the next rotation.
+_HEAD = (
+    "q_wasserstein", "q_stream_wasserstein", "q_cvm_drift",
+    "q_cliffs_delta", "q_err_at_k", "q_brier_decomp",
+    "q_qini_uplift", "q_holt_winters", "q_prop_compare",
+    "q_vocab_richness", "q_mantel_haenszel", "q_cka", "q_tv_drift",
+    "q_energy_dist", "q_mcnemar", "q_cochrans_q", "q_kuiper",
+    "q_union_distinct",
+    "q_ann_recall", "q_assortativity", "q_attribution",
+    "q_changed_partitions", "q_containment_pairs", "q_cooccur_pmi",
+    "q_cosine_topk", "q_curation_canonical", "q_dedup_exact",
+    "q_dedup_groups", "q_dedup_jaccard", "q_doc_chunks",
+    "q_ema_trailing", "q_embedding_neardup",
+    "q_exact_global_quantiles", "q_funnel_within",
+    "q_group_quantiles", "q_heavy_hitters", "q_hits",
+    "q_interval_coverage", "q_ivf_topk", "q_jaccard_prefix",
+    "q_join_explosion", "q_kcore", "q_label_prop", "q_logreg_gd",
+    "q_lsh_bucketed_topk", "q_lsh_multiprobe",
+    "q_maintain_distinct", "q_order_by_limit", "q_path_counts",
+    "q_personalized_pagerank",
+    "q_repetition_metrics", "q_resample_interp", "q_robust_outliers",
+    "q_rolling_corr", "q_salted_join", "q_scd2_lookup",
+    "q_seasonal_anomaly", "q_semi_anti_join", "q_session_capped",
+    "q_silhouette", "q_stream_dedup", "q_stream_ivf_assign",
+    "q_stream_matview", "q_text_analysis", "q_text_scrub",
+    "q_tfidf_terms", "q_top_n", "q_tpch_q1",
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declaration order is load-bearing: the driver's correctness gate
-    hashes only the FIRST 50 entries, so the window rotates each round
-    until no stratum is more than a few rounds stale.
-
-    Round-14 window (the r13 verdict's task-1 composition, exactly):
-    (a) the 17 r13 post-window queries — declared after the r13 window
-    froze, so they carry ZERO driver evidence (all judge-green in the
-    r13 verdict's full 368-query independent sim); (b) q_union_distinct,
-    the single r06-stale spill declared in r13; (c) the 32
-    alphabetically-first rows of the r07 stratum (50 rows; the
-    remaining 18 head the r15 rotation). Zero overlap with the r13
-    window (pinned by
-    tests/test_queries.py::test_window_rotation_discipline,
-    round-boundary-safe: staleness is recomputed only from CORRECTNESS
-    rounds < WINDOW_ROUND). After this round the staleness floor is
-    r08 except the 18 remaining r07 rows.
-
-    The body declares the full registry (legacy r13 grouping kept for
-    diff locality); the R14_WINDOW list at the bottom imposes the
-    actual first-50 order.
-    """
+    """Every q_* function of this module plus the TPC-H set: _HEAD
+    first, then definition order, then TPC-H."""
     from table_computing_spark.queries_tpch import TPCH_QUERIES
 
-    tpch = dict(TPCH_QUERIES)
-    window_50 = {
-        # (a) the 26 r12 post-window queries — never driver-verified (by
-        # construction; judge-green at sf0.01 in the r12 verdict session)
-        "q_dim_ablation_fixed": q_dim_ablation_fixed,
-        "q_kruskal_wallis": q_kruskal_wallis,
-        "q_anova_f": q_anova_f,
-        "q_levene_bf": q_levene_bf,
-        "q_cochran_armitage": q_cochran_armitage,
-        "q_matthews": q_matthews,
-        "q_krippendorff": q_krippendorff,
-        "q_theil_sen": q_theil_sen,
-        "q_page_hinkley": q_page_hinkley,
-        "q_temperature_weights": q_temperature_weights,
-        "q_fleiss": q_fleiss,
-        "q_friedman": q_friedman,
-        "q_dirichlet_lm": q_dirichlet_lm,
-        "q_rbo": q_rbo,
-        "q_stream_page_hinkley": q_stream_page_hinkley,
-        "q_holt": q_holt,
-        "q_logrank": q_logrank,
-        "q_textrank": q_textrank,
-        "q_brier": q_brier,
-        "q_cohens_d": q_cohens_d,
-        "q_cramers_v": q_cramers_v,
-        "q_sprt": q_sprt,
-        "q_calinski": q_calinski,
-        "q_mann_kendall": q_mann_kendall,
-        "q_by_fdr": q_by_fdr,
-        "q_stream_sprt": q_stream_sprt,
-        # (b) 24 of the 25 remaining r06-stale rows (q_union_distinct
-        # spills to r14; q_set_ops covers the set-ops semantics here)
-        "q_contract_quarantine": q_contract_quarantine,
-        "q_bpe_merges": q_bpe_merges,
-        "q_jpeg_decode": q_jpeg_decode,
-        "q_linkage_em": q_linkage_em,
-        "q_target_encode": q_target_encode,
-        "q_avg_ref_nulls": q_avg_ref_nulls,
-        "q_rollup": q_rollup,
-        "q_grouping_sets": q_grouping_sets,
-        "q_count_distinct": q_count_distinct,
-        "q_percentile": q_percentile,
-        "q_asof_join": q_asof_join,
-        "q_range_join": q_range_join,
-        "q_group_concat": q_group_concat,
-        "q_scalar_functions": q_scalar_functions,
-        "q_date_functions": q_date_functions,
-        "q_set_ops": q_set_ops,
-        "q_bpe_segment": q_bpe_segment,
-        "q_triangle_counts": q_triangle_counts,
-        "q_dense_ids": q_dense_ids,
-        "q_semantic_dedup": q_semantic_dedup,
-        "q_cms_counts": q_cms_counts,
-        "q_incremental_agg": q_incremental_agg,
-        "q_kn_bigram_nll": q_kn_bigram_nll,
-        "q_resample_ffill": q_resample_ffill,
-    }
-    assert len(window_50) == 50, f"driver window must hold 50, got {len(window_50)}"
-    tail = {
-        # remaining r06 stratum (1 — the r13 spill; heads the r14 rotation)
-        "q_union_distinct": q_union_distinct,
-        # --- last green r07 (next-stalest; fills the r14/r15 windows) ---
-        "q_containment_pairs": q_containment_pairs,
-        "q_personalized_pagerank": q_personalized_pagerank,
-        "q_exact_global_quantiles": q_exact_global_quantiles,
-        "q_maintain_distinct": q_maintain_distinct,
-        "q_join_explosion": q_join_explosion,
-        "q_changed_partitions": q_changed_partitions,
-        "q_ann_recall": q_ann_recall,
-        "q_session_capped": q_session_capped,
-        "q_ema_trailing": q_ema_trailing,
-        "q_robust_outliers": q_robust_outliers,
-        "q_rolling_corr": q_rolling_corr,
-        "q_scd2_lookup": q_scd2_lookup,
-        "q_funnel_within": q_funnel_within,
-        "q_path_counts": q_path_counts,
-        "q_stream_dedup": q_stream_dedup,
-        "q_semi_anti_join": q_semi_anti_join,
-        "q_top_n": q_top_n,
-        "q_order_by_limit": q_order_by_limit,
-        "q_dedup_exact": q_dedup_exact,
-        "q_cosine_topk": q_cosine_topk,
-        "q_heavy_hitters": q_heavy_hitters,
-        "q_text_analysis": q_text_analysis,
-        "q_stream_ivf_assign": q_stream_ivf_assign,
-        "q_dedup_groups": q_dedup_groups,
-        "q_dedup_jaccard": q_dedup_jaccard,
-        "q_curation_canonical": q_curation_canonical,
-        "q_embedding_neardup": q_embedding_neardup,
-        "q_lsh_bucketed_topk": q_lsh_bucketed_topk,
-        "q_lsh_multiprobe": q_lsh_multiprobe,
-        "q_ivf_topk": q_ivf_topk,
-        "q_salted_join": q_salted_join,
-        "q_repetition_metrics": q_repetition_metrics,
-        "q_text_scrub": q_text_scrub,
-        "q_tfidf_terms": q_tfidf_terms,
-        "q_doc_chunks": q_doc_chunks,
-        "q_tpch_q1": tpch["q_tpch_q1"],
-        "q_stream_matview": q_stream_matview,
-        "q_resample_interp": q_resample_interp,
-        "q_attribution": q_attribution,
-        "q_cooccur_pmi": q_cooccur_pmi,
-        "q_hits": q_hits,
-        "q_silhouette": q_silhouette,
-        "q_jaccard_prefix": q_jaccard_prefix,
-        "q_interval_coverage": q_interval_coverage,
-        "q_label_prop": q_label_prop,
-        "q_group_quantiles": q_group_quantiles,
-        "q_seasonal_anomaly": q_seasonal_anomaly,
-        "q_logreg_gd": q_logreg_gd,
-        "q_kcore": q_kcore,
-        "q_assortativity": q_assortativity,
-        # --- last green r08 ---
-        "q_bfs_hops": q_bfs_hops,
-        "q_time_to_convert": q_time_to_convert,
-        "q_window_distinct": q_window_distinct,
-        "q_rfm": q_rfm,
-        "q_benford": q_benford,
-        "q_hashed_features": q_hashed_features,
-        "q_running_balance": q_running_balance,
-        "q_stream_running_balance": q_stream_running_balance,
-        "q_decayed_topk": q_decayed_topk,
-        "q_gini": q_gini,
-        "q_tpch_q12": tpch["q_tpch_q12"],
-        "q_transform_explode": q_transform_explode,
-        "q_over_apply": q_over_apply,
-        "q_join_full_outer": q_join_full_outer,
-        "q_join_nullsafe": q_join_nullsafe,
-        "q_flagship_top100": q_flagship_top100,
-        "q_filter_rows": q_filter_rows,
-        "q_transform_rows": q_transform_rows,
-        "q_select_rows": q_select_rows,
-        "q_pack_sequences": q_pack_sequences,
-        "q_anomaly_zscore": q_anomaly_zscore,
-        "q_mode_per_key": q_mode_per_key,
-        "q_latest_per_key": q_latest_per_key,
-        "q_retention_cohort": q_retention_cohort,
-        "q_funnel": q_funnel,
-        "q_fuzzy_pairs": q_fuzzy_pairs,
-        "q_moment_stats": q_moment_stats,
-        "q_embedding_centroids": q_embedding_centroids,
-        "q_sample_split": q_sample_split,
-        "q_stratified_sample": q_stratified_sample,
-        "q_csv_ingest": q_csv_ingest,
-        "q_json_ingest": q_json_ingest,
-        "q_prefix_cumsum": q_prefix_cumsum,
-        "q_skyline": q_skyline,
-        "q_cube": q_cube,
-        "q_ab_ttest": q_ab_ttest,
-        "q_autocorr": q_autocorr,
-        "q_url_canonical": q_url_canonical,
-        "q_url_dedup": q_url_dedup,
-        "q_vocab_growth": q_vocab_growth,
-        "q_quantile_buckets": q_quantile_buckets,
-        "q_knn_classify": q_knn_classify,
-        "q_boilerplate": q_boilerplate,
-        "q_running_balance_scaled": q_running_balance_scaled,
-        "q_peak_concurrency": q_peak_concurrency,
-        "q_langid_confusion": q_langid_confusion,
-        "q_token_fertility": q_token_fertility,
-        "q_stream_json_ingest": q_stream_json_ingest,
-        "q_minhash_accuracy": q_minhash_accuracy,
-        "q_asof_forward": q_asof_forward,
-        # --- last green r09 ---
-        "q_tdigest_accuracy": q_tdigest_accuracy,
-        "q_bitmap_distinct": q_bitmap_distinct,
-        "q_pit_features": q_pit_features,
-        "q_ks_drift": q_ks_drift,
-        "q_calibration": q_calibration,
-        "q_pq_recall": q_pq_recall,
-        "q_impute": q_impute,
-        "q_ivfpq": q_ivfpq,
-        "q_corr_matrix": q_corr_matrix,
-        "q_stream_bitmap_distinct": q_stream_bitmap_distinct,
-        "q_cusum": q_cusum,
-        "q_winsorize": q_winsorize,
-        "q_percent_rank_global": q_percent_rank_global,
-        "q_interval_overlap": q_interval_overlap,
-        "q_stream_tdigest": q_stream_tdigest,
-        "q_weighted_quantiles": q_weighted_quantiles,
-        "q_bootstrap_ci": q_bootstrap_ci,
-        "q_rolling_median": q_rolling_median,
-        "q_profile_diff": q_profile_diff,
-        "q_video_scene_changes": q_video_scene_changes,
-        "q_multimodal_features": q_multimodal_features,
-        "q_data_profile": q_data_profile,
-        "q_histogram": q_histogram,
-        "q_integrity_checks": q_integrity_checks,
-        "q_lag_lead": q_lag_lead,
-        "q_json_extract": q_json_extract,
-        "q_unpivot": q_unpivot,
-        "q_udaf_apply": q_udaf_apply,
-        "q_over_by_duration": q_over_by_duration,
-        "q_ab_power": q_ab_power,
-        "q_golden_record": q_golden_record,
-        "q_label_noise": q_label_noise,
-        "q_gap_report": q_gap_report,
-        "q_temporal_split": q_temporal_split,
-        "q_seq_pairs": q_seq_pairs,
-        "q_stream_kmv": q_stream_kmv,
-        "q_join_cardinality": q_join_cardinality,
-        "q_stream_fingerprint": q_stream_fingerprint,
-        "q_kmv_intersect": q_kmv_intersect,
-        "q_edit1_pairs": q_edit1_pairs,
-        "q_table_fingerprint": q_table_fingerprint,
-        "q_topk_others": q_topk_others,
-        "q_spatial_radius_join": q_spatial_radius_join,
-        "q_spatial_knn": q_spatial_knn,
-        "q_frequent_pairs": q_frequent_pairs,
-        "q_assoc_rules": q_assoc_rules,
-        "q_quantile_normalize": q_quantile_normalize,
-        "q_quota_allocation": q_quota_allocation,
-        "q_ab_srm": q_ab_srm,
-        "q_multi_horizon": q_multi_horizon,
-        # --- last green r10 ---
-        "q_window_tumble": q_window_tumble,
-        "q_window_slide": q_window_slide,
-        "q_window_session": q_window_session,
-        "q_over_by_size": q_over_by_size,
-        "q_streaming_tumble": q_streaming_tumble,
-        "q_streaming_slide": q_streaming_slide,
-        "q_streaming_session": q_streaming_session,
-        "q_stream_over_duration": q_stream_over_duration,
-        "q_stream_enrich": q_stream_enrich,
-        "q_stream_interval_join": q_stream_interval_join,
-        "q_stream_anomaly": q_stream_anomaly,
-        "q_minhash_lsh": q_minhash_lsh,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_stream_minhash": q_stream_minhash,
-        "q_approx_quantile": q_approx_quantile,
-        "q_approx_distinct": q_approx_distinct,
-        "q_gate_relational": q_gate_relational,
-        "q_gate_rowwise_udf": q_gate_rowwise_udf,
-        "q_gate_aggregate": q_gate_aggregate,
-        "q_gate_over": q_gate_over,
-        "q_stream_over": q_stream_over,
-        "q_gate_joins": q_gate_joins,
-        "q_gate_setops": q_gate_setops,
-        "q_item_cf": q_item_cf,
-        "q_link_prediction": q_link_prediction,
-        "q_sssp_weighted": q_sssp_weighted,
-        "q_kaplan_meier": q_kaplan_meier,
-        "q_forecast_eval": q_forecast_eval,
-        "q_conformal": q_conformal,
-        "q_did": q_did,
-        "q_js_divergence": q_js_divergence,
-        "q_binpack_files": q_binpack_files,
-        "q_phrase_search": q_phrase_search,
-        "q_rake_keywords": q_rake_keywords,
-        "q_window_kmv": q_window_kmv,
-        "q_grid_dbscan": q_grid_dbscan,
-        "q_exact_k_sample": q_exact_k_sample,
-        "q_kmv_rollup": q_kmv_rollup,
-        "q_dim_ablation": q_dim_ablation,
-        "q_zipf_fit": q_zipf_fit,
-        "q_stream_topk": q_stream_topk,
-        "q_pivot": q_pivot,
-        "q_token_budget": q_token_budget,
-        "q_pipeline_curation": q_pipeline_curation,
-        "q_doc_novelty": q_doc_novelty,
-        "q_embedding_groups": q_embedding_groups,
-        "q_decontaminate": q_decontaminate,
-        "q_dup_spans": q_dup_spans,
-        "q_unigram_logprob": q_unigram_logprob,
-        "q_mixture_weights": q_mixture_weights,
-        # --- last green r11 (the r11 driver window, freshest) ---
-        "q_roc_auc": q_roc_auc,
-        "q_eval_f1": q_eval_f1,
-        "q_ndcg": q_ndcg,
-        "q_rrf_fusion": q_rrf_fusion,
-        "q_rouge2": q_rouge2,
-        "q_als_rank1": q_als_rank1,
-        "q_changepoint": q_changepoint,
-        "q_burstiness": q_burstiness,
-        "q_topo_layers": q_topo_layers,
-        "q_graph_modularity": q_graph_modularity,
-        "q_skipgram_negatives": q_skipgram_negatives,
-        "q_audio_spectrum": q_audio_spectrum,
-        "q_bloom_join": q_bloom_join,
-        "q_bm25_topk": q_bm25_topk,
-        "q_cdc_apply": q_cdc_apply,
-        "q_char_entropy": q_char_entropy,
-        "q_dedup_incremental": q_dedup_incremental,
-        "q_doc_chunks_overlap": q_doc_chunks_overlap,
-        "q_dup_span_intervals": q_dup_span_intervals,
-        "q_embedding_quantize": q_embedding_quantize,
-        "q_event_transitions": q_event_transitions,
-        "q_gopher_rules": q_gopher_rules,
-        "q_group_split": q_group_split,
-        "q_hard_negatives": q_hard_negatives,
-        "q_image_dedup": q_image_dedup,
-        "q_key_skew": q_key_skew,
-        "q_linreg": q_linreg,
-        "q_mixture_apply": q_mixture_apply,
-        "q_multimodal_decode": q_multimodal_decode,
-        "q_mutual_info": q_mutual_info,
-        "q_nb_classify": q_nb_classify,
-        "q_ohlc": q_ohlc,
-        "q_pagerank": q_pagerank,
-        "q_png_decode": q_png_decode,
-        "q_psi_drift": q_psi_drift,
-        "q_record_linkage": q_record_linkage,
-        "q_rp_project": q_rp_project,
-        "q_scd2": q_scd2,
-        "q_snapshot_diff": q_snapshot_diff,
-        "q_stream_curation": q_stream_curation,
-        "q_stream_drift": q_stream_drift,
-        "q_stream_ohlc": q_stream_ohlc,
-        "q_tpch_q10": tpch["q_tpch_q10"],
-        "q_tpch_q11": tpch["q_tpch_q11"],
-        "q_tpch_q13": tpch["q_tpch_q13"],
-        "q_twap": q_twap,
-        "q_video_frames": q_video_frames,
-        "q_weighted_sample": q_weighted_sample,
-        "q_woe_iv": q_woe_iv,
-        "q_zorder_locality": q_zorder_locality,
-        # --- last green r12 (the r12 driver window, freshest) ---
-        "q_avg_precision": q_avg_precision,
-        "q_cohens_kappa": q_cohens_kappa,
-        "q_bleu": q_bleu,
-        "q_pass_at_k": q_pass_at_k,
-        "q_bradley_terry": q_bradley_terry,
-        "q_kendall_tau": q_kendall_tau,
-        "q_spearman": q_spearman,
-        "q_mann_whitney": q_mann_whitney,
-        "q_bh_fdr": q_bh_fdr,
-        "q_max_drawdown": q_max_drawdown,
-        "q_nelson_aalen": q_nelson_aalen,
-        "q_clustering_coeff": q_clustering_coeff,
-        "q_decision_stump": q_decision_stump,
-        "q_isotonic": q_isotonic,
-        "q_chi2_screen": q_chi2_screen,
-        "q_cuped": q_cuped,
-        "q_cumulative_gains": q_cumulative_gains,
-        "q_acf": q_acf,
-        "q_seasonal_decompose": q_seasonal_decompose,
-        "q_embedding_standardize": q_embedding_standardize,
-        "q_flesch": q_flesch,
-        "q_stream_eval": q_stream_eval,
-        "q_wilson": q_wilson,
-        "q_eb_shrink": q_eb_shrink,
-        "q_trimmed_mean": q_trimmed_mean,
-        "q_tpch_q2": tpch["q_tpch_q2"],
-        "q_tpch_q3": tpch["q_tpch_q3"],
-        "q_tpch_q4": tpch["q_tpch_q4"],
-        "q_tpch_q5": tpch["q_tpch_q5"],
-        "q_tpch_q6": tpch["q_tpch_q6"],
-        "q_tpch_q7": tpch["q_tpch_q7"],
-        "q_tpch_q8": tpch["q_tpch_q8"],
-        "q_tpch_q9": tpch["q_tpch_q9"],
-        "q_tpch_q14": tpch["q_tpch_q14"],
-        "q_tpch_q15": tpch["q_tpch_q15"],
-        "q_tpch_q16": tpch["q_tpch_q16"],
-        "q_tpch_q17": tpch["q_tpch_q17"],
-        "q_tpch_q18": tpch["q_tpch_q18"],
-        "q_tpch_q19": tpch["q_tpch_q19"],
-        "q_tpch_q20": tpch["q_tpch_q20"],
-        "q_tpch_q21": tpch["q_tpch_q21"],
-        "q_tpch_q22": tpch["q_tpch_q22"],
-        "q_filter_select": q_filter_select,
-        "q_project_negative": q_project_negative,
-        "q_groupby_agg": q_groupby_agg,
-        "q_join_inner": q_join_inner,
-        "q_join_left": q_join_left,
-        "q_join_multi": q_join_multi,
-        "q_over_rank": q_over_rank,
-        "q_window_ranks": q_window_ranks,
-        # --- new in r13 (post-window additions; these head the r14
-        # rotation together with the spilled r06 row) ---
-        "q_wasserstein": q_wasserstein,
-        "q_cvm_drift": q_cvm_drift,
-        "q_cliffs_delta": q_cliffs_delta,
-        "q_err_at_k": q_err_at_k,
-        "q_brier_decomp": q_brier_decomp,
-        "q_qini_uplift": q_qini_uplift,
-        "q_holt_winters": q_holt_winters,
-        "q_prop_compare": q_prop_compare,
-        "q_vocab_richness": q_vocab_richness,
-        "q_mantel_haenszel": q_mantel_haenszel,
-        "q_stream_wasserstein": q_stream_wasserstein,
-        "q_cka": q_cka,
-        "q_tv_drift": q_tv_drift,
-        "q_energy_dist": q_energy_dist,
-        "q_mcnemar": q_mcnemar,
-        "q_cochrans_q": q_cochrans_q,
-        "q_kuiper": q_kuiper,
-    }
-    reg = {**window_50, **tail}
-    # r14 driver window: 17 r13 post-window (zero driver evidence) +
-    # the r06 spill + the 32 alphabetically-first r07-stale rows.
-    r14_window = [
-        "q_wasserstein", "q_stream_wasserstein", "q_cvm_drift",
-        "q_cliffs_delta", "q_err_at_k", "q_brier_decomp",
-        "q_qini_uplift", "q_holt_winters", "q_prop_compare",
-        "q_vocab_richness", "q_mantel_haenszel", "q_cka", "q_tv_drift",
-        "q_energy_dist", "q_mcnemar", "q_cochrans_q", "q_kuiper",
-        "q_union_distinct",
-        "q_ann_recall", "q_assortativity", "q_attribution",
-        "q_changed_partitions", "q_containment_pairs", "q_cooccur_pmi",
-        "q_cosine_topk", "q_curation_canonical", "q_dedup_exact",
-        "q_dedup_groups", "q_dedup_jaccard", "q_doc_chunks",
-        "q_ema_trailing", "q_embedding_neardup",
-        "q_exact_global_quantiles", "q_funnel_within",
-        "q_group_quantiles", "q_heavy_hitters", "q_hits",
-        "q_interval_coverage", "q_ivf_topk", "q_jaccard_prefix",
-        "q_join_explosion", "q_kcore", "q_label_prop", "q_logreg_gd",
-        "q_lsh_bucketed_topk", "q_lsh_multiprobe",
-        "q_maintain_distinct", "q_order_by_limit", "q_path_counts",
-        "q_personalized_pagerank",
-    ]
-    assert len(r14_window) == 50, f"driver window must hold 50, got {len(r14_window)}"
-    ordered = {k: reg[k] for k in r14_window}
-    # tail: remaining 18 r07 rows first (they head the r15 rotation),
-    # then everything else in its legacy stale-first declaration order.
-    r07_rest = [
-        "q_repetition_metrics", "q_resample_interp", "q_robust_outliers",
-        "q_rolling_corr", "q_salted_join", "q_scd2_lookup",
-        "q_seasonal_anomaly", "q_semi_anti_join", "q_session_capped",
-        "q_silhouette", "q_stream_dedup", "q_stream_ivf_assign",
-        "q_stream_matview", "q_text_analysis", "q_text_scrub",
-        "q_tfidf_terms", "q_top_n", "q_tpch_q1",
-    ]
-    ordered.update({k: reg[k] for k in r07_rest})
-    ordered.update({k: v for k, v in reg.items() if k not in ordered})
-    return ordered
+    reg = {n: f for n, f in globals().items() if n.startswith("q_") and callable(f)}
+    reg.update(TPCH_QUERIES)
+    return {**{n: reg[n] for n in _HEAD}, **reg}
 
 
 # ---------------------------------------------------------------------------

@@ -64,7 +64,7 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _set_read_confs(spark: SparkSession) -> None:
     # The driver may hand us a session without our defaults; these are
     # runtime SQL confs, so set them defensively (older testdata stored
     # events.ts as TIMESTAMP(NANOS), which Spark can't read natively;
@@ -72,6 +72,10 @@ def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamps).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    _set_read_confs(spark)
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
@@ -94,6 +98,24 @@ def load_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dtype != "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def stream_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table `name` replayed as a parquet file stream over `sf_dir`.
+
+    The stream carries the file's RAW schema, taken from the cached
+    `_read_parquet` schema (no inference job after the first read of a
+    file version): a file source needs its schema up front, and
+    load_df's normalized events `ts` (TimestampType) would not match the
+    files. Readers of `ts` dispatch on its raw type
+    (`__spark_entry__._ts_ms`)."""
+    _set_read_confs(spark)
+    schema = _read_parquet(spark, f"{sf_dir}/{name}.parquet").schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> Table:

@@ -13,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from table_computing_spark.sources.parquet import load_df
+from table_computing_spark.sources.parquet import load_df, stream_df
 
 ROWS = [
     (1, 1_600_000_000_123_456, 10, "click", 1.5),
@@ -67,14 +67,17 @@ def test_events_ts_both_physical_layouts(spark, tmp_path_factory):
     # micros beyond ms also survive — check one directly)
     assert out["us"] == out["ns"] == out["replaced"]
     assert out["us"][1] == 1_600_000_000_123
+    # the stream source keeps the RAW type: epoch-ns BIGINT, not the
+    # normalized timestamp
+    assert dict(stream_df(spark, str(d_ns), "events").dtypes)["ts"] == "bigint"
 
 
-def _load_jobs(spark, group, sf_dir, name):
-    """Spark jobs submitted by one `load_df` call."""
+def _load_jobs(spark, group, loader, sf_dir, name):
+    """Spark jobs submitted by one `loader(spark, sf_dir, name)` call."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        load_df(spark, sf_dir, name)
+        loader(spark, sf_dir, name)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -84,8 +87,10 @@ def _load_jobs(spark, group, sf_dir, name):
 
 def test_reload_of_unchanged_file_reuses_its_schema(spark, tmp_path):
     _write(tmp_path, pa.array([r[1] for r in ROWS], pa.timestamp("us")), None)
-    assert _load_jobs(spark, f"schema-first-{id(tmp_path)}", str(tmp_path), "events") >= 1
-    assert _load_jobs(spark, f"schema-again-{id(tmp_path)}", str(tmp_path), "events") == 0
+    d = str(tmp_path)
+    assert _load_jobs(spark, f"schema-first-{id(tmp_path)}", load_df, d, "events") >= 1
+    assert _load_jobs(spark, f"schema-again-{id(tmp_path)}", load_df, d, "events") == 0
+    assert _load_jobs(spark, f"schema-stream-{id(tmp_path)}", stream_df, d, "events") == 0
 
 
 def test_spark_written_parquet_directory_loads(spark, tmp_path):

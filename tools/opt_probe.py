@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Round-14 optimization probe: isolated cold+warm timing for a named
-list of entry queries, panel-bracketed (bench._calibration_panel), with
-optional plan dump to plans/r14/<q>_<tag>.txt.
+"""Optimization probe: isolated cold+warm timing for a named list of
+entry queries, panel-bracketed (bench._calibration_panel), with optional
+plan dump to plans/probe/<q>_<tag>.txt.
 
 Usage:
-    python tools/opt_probe_r14.py q_bootstrap_ci q_grid_dbscan \
+    python tools/opt_probe.py q_bootstrap_ci q_grid_dbscan \
         [--reps 3] [--plans before|after] [--sf /root/testdata/sf0.1]
 
 Methodology (spark_optimization_guide.md §1): noop sink so the full
@@ -36,7 +36,7 @@ def main() -> None:
 
     from table_computing_spark.session import get_spark
 
-    spark = get_spark("tc-opt-probe-r14")
+    spark = get_spark("tc-opt-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
@@ -75,8 +75,8 @@ def main() -> None:
         df = qs[name](spark, args.sf)
         sha = plan_fingerprint(df)
         if args.plans:
-            os.makedirs(os.path.join(REPO, "plans", "r14"), exist_ok=True)
-            path = os.path.join(REPO, "plans", "r14", f"{name}_{args.plans}.txt")
+            os.makedirs(os.path.join(REPO, "plans", "probe"), exist_ok=True)
+            path = os.path.join(REPO, "plans", "probe", f"{name}_{args.plans}.txt")
             with open(path, "w") as f:
                 f.write(df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
