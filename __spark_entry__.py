@@ -1673,7 +1673,8 @@ _STREAM_RUNS = {"n": 0}
 
 
 class _state_partitions:
-    """Scoped spark.sql.shuffle.partitions = 8 for streaming runs.
+    """Scoped spark.sql.shuffle.partitions = stateful.STATE_PARTITIONS
+    (8) for streaming runs.
 
     State-store commit cost is per partition per micro-batch: ~6.5 ms
     each (perfbench `stream`, nproc=4: `streaming.state_commit_s`
@@ -1686,15 +1687,20 @@ class _state_partitions:
     q_stream_running_balance 4.81→9.40 s — the scoped conf governs
     EVERY shuffle in the stream, so fewer partitions also serializes
     the per-(key,batch) Python cadence that dominates these queries.
-    On a cluster raise the 8 toward total cores (state scales out by
-    key hash)."""
+    On a cluster raise STATE_PARTITIONS toward total cores (state
+    scales out by key hash). That also raises the key-bucket count of
+    stream_over_by_size / stream_over_by_duration, whose state
+    parallelism it caps; both counts are fixed for a checkpoint's
+    life, as Spark fixes its partition count."""
 
     def __init__(self, spark):
         self.spark = spark
 
     def __enter__(self):
+        from table_computing_spark.streaming.stateful import STATE_PARTITIONS
+
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)

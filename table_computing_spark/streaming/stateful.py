@@ -6,17 +6,24 @@ columns computed over the buffer ending at that row.
 ref window/OverWindowByDuration.java:63-92 + InThreadOverWindow.java:38-104
 — same, but the buffer is a trailing time range [t - size + 1, t].
 
-The reference reaches these semantics with hand-managed per-thread maps
-behind a `rehash`; here the shuffle is the groupBy and the buffer lives
-in the state store (checkpointable, fault-tolerant — strictly more than
-the reference, which loses state on crash; README.md:141-152).
+The reference keeps all of a compute thread's keys' buffers in one map
+and serves a batch in one pass; here the keys are hashed into
+`STATE_PARTITIONS` buckets, the shuffle is the groupBy on the bucket,
+and each bucket's buffers live in one state-store row (checkpointable,
+fault-tolerant — strictly more than the reference, which loses state
+on crash; README.md:141-152). A micro-batch makes one Python call per
+bucket it touches, not one per key: pyspark's per-group plumbing
+(per-column Arrow → pandas, GroupState, the state frame) is paid once.
+Within the call the user's function still sees one key's history at a
+time, and rows of keys absent from the batch are carried as Arrow
+bytes without becoming pandas rows.
 
-State is the trailing buffer as one Arrow IPC stream in a binary
-field (`_dump_buf` / `_load_buf`) — schema-stable across arbitrary input
+State is buffered rows as one Arrow IPC stream in a binary field
+(`_dump_buf` / `_load_buf`) — schema-stable across arbitrary input
 columns, exact (every value, null and timestamp nanosecond comes back as
 it went in), and bounded: N rows (by-size) or one time-range of rows
-(by-duration) per key. The raw-row session transforms keep their open
-session the same way.
+(by-duration) per key. The raw-row session transforms keep each key's
+open session the same way.
 
 Batch equivalents with identical semantics: operators/windows.py
 over_by_size / over_by_duration (WindowSpec frames) — the correctness
@@ -32,8 +39,17 @@ from typing import Any, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+STATE_PARTITIONS = 8
+"""spark.sql.shuffle.partitions of the library's stream queries
+(`__spark_entry__._state_partitions`) and the key-bucket count of the
+trailing-window operators, read when a stream is built. Both are fixed
+for a checkpoint's life: Spark keeps the partition count it started
+with, and a bucket state written under another count raises."""
 
 RowAgg = Callable[[pd.DataFrame], dict[str, Any]]
 """(trailing buffer ending at the current row) → {output col → value} —
@@ -53,23 +69,46 @@ class VectorizedRowAgg:
         self.fn = fn
 
 
-def _dump_buf(df: pd.DataFrame) -> bytes:
-    """A buffer of rows as the value of a BinaryType state field: one
-    Arrow IPC stream, with neither the index nor the pandas schema
-    metadata (which would double a small buffer's size)."""
-    table = pa.Table.from_pandas(df, preserve_index=False).replace_schema_metadata(None)
+def _to_arrow(df: pd.DataFrame) -> pa.Table:
+    """Column by column: `pa.Table.from_pandas` spends most of a small
+    frame's conversion inferring types through its pandas metadata."""
+    return pa.Table.from_arrays(
+        [pa.array(s.to_numpy(), from_pandas=True) for _, s in df.items()],
+        names=list(df.columns),
+    )
+
+
+def _dump_table(table: pa.Table) -> bytes:
     sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, table.schema) as writer:
         writer.write_table(table)
     return sink.getvalue().to_pybytes()
 
 
+def _load_table(b: bytes) -> pa.Table:
+    return pa.ipc.open_stream(b).read_all()
+
+
+def _dump_buf(df: pd.DataFrame) -> bytes:
+    """A buffer of rows as the value of a BinaryType state field: one
+    Arrow IPC stream, without the index."""
+    return _dump_table(_to_arrow(df))
+
+
 def _load_buf(b: bytes) -> pd.DataFrame:
     """Inverse of `_dump_buf`, on a fresh RangeIndex."""
-    return pa.ipc.open_stream(b).read_all().to_pandas()
+    return _load_table(b).to_pandas()
 
 
 _BUF_SCHEMA = T.StructType([T.StructField("buf", T.BinaryType())])
+_BUCKET_STATE = T.StructType(
+    [T.StructField("buf", T.BinaryType()), T.StructField("buckets", T.IntegerType())]
+)
+_BUCKET = "__bucket"
+
+Keep = Callable[[pd.DataFrame, np.ndarray], np.ndarray]
+"""(key-sorted history, position of each row's key's last row) → mask
+of the rows that stay in the trailing window of that last row."""
 
 
 def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame:
@@ -78,36 +117,133 @@ def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame:
     return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
-def _run_buffered(
-    pdfs: Iterator[pd.DataFrame],
-    state,
+def _key_codes(keys: list[str], old: pa.Table | None, batch: pd.DataFrame) -> np.ndarray:
+    """One int code in [0, n) per row of `old` then `batch`, equal iff
+    the rows' key columns are equal (null equals null). Computed in Arrow,
+    so `old`'s rows never become pandas rows."""
+    n = (0 if old is None else old.num_rows) + len(batch)
+    codes = np.zeros(n, dtype=np.int64)
+    for i, k in enumerate(keys):
+        new = pa.array(batch[k].to_numpy(), from_pandas=True)
+        if old is None:
+            col = pa.chunked_array([new])
+        else:
+            prev = old.column(k)
+            if prev.type != new.type:  # e.g. a long key with a null arrives as double
+                t = pa.unify_schemas(
+                    [pa.schema([(k, prev.type)]), pa.schema([(k, new.type)])],
+                    promote_options="permissive",
+                ).field(k).type
+                prev, new = prev.cast(t), new.cast(t)
+            col = pa.chunked_array(prev.chunks + [new])
+        enc = pc.dictionary_encode(col, null_encoding="encode")
+        idx = np.concatenate([c.indices.to_numpy() for c in enc.chunks]).astype(np.int64)
+        codes = codes * len(enc.chunks[-1].dictionary) + idx
+        if i:
+            codes = pd.factorize(codes)[0]  # dense again: codes stay < n
+    return codes
+
+
+def _over_bucket(
+    old: pa.Table | None,
+    batch: pd.DataFrame,
+    keys: list[str],
     order_col: str,
     agg_fn: RowAgg | VectorizedRowAgg,
     added_cols: list[str],
-    keep_fn: Callable[[pd.DataFrame], pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    buf = _load_buf(state.get[0]) if state.exists else None
-    batch = _concat(list(pdfs))
-    batch = batch.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-    history = batch if buf is None else pd.concat([buf, batch], ignore_index=True)
-    n_old = 0 if buf is None else len(buf)
-    if isinstance(agg_fn, VectorizedRowAgg):
-        added = agg_fn.fn(history, n_old)
-        for c in added_cols:
-            batch[c] = added[c].values
-    else:
-        out_rows = {c: [] for c in added_cols}
-        for i in range(len(batch)):
-            upto = history.iloc[: n_old + i + 1]
-            trailing = keep_fn(upto)
-            vals = agg_fn(trailing)
+    keep: Keep,
+) -> tuple[pd.DataFrame, pa.Table]:
+    """One micro-batch of one bucket: `old` holds the bucket's buffered
+    rows, `batch` its new rows. Returns the batch rows with the added
+    columns, and the rows to buffer.
+
+    Each key present in the batch gets its history — its buffered rows
+    in buffer order, then its batch rows stably sorted on `order_col` —
+    and `agg_fn` runs once per key on it. Buffered rows of keys absent
+    from the batch are carried over in Arrow."""
+    n_old = 0 if old is None else old.num_rows
+    codes = _key_codes(keys, old, batch)
+    old_codes, new_codes = codes[:n_old], codes[n_old:]
+    # the batch by key, then stably by order_col
+    order = batch[order_col].reset_index(drop=True).sort_values(kind="mergesort").index.to_numpy()
+    order = order[np.argsort(new_codes[order], kind="stable")]
+    batch, new_codes = batch.take(order).reset_index(drop=True), new_codes[order]
+    history, carried = batch, None
+    if n_old:
+        hit = np.zeros(int(codes.max()) + 1, dtype=bool)
+        hit[new_codes] = True
+        touched = hit[old_codes]
+        carried = old.filter(pa.array(~touched))
+        old_codes = old_codes[touched]
+        if len(old_codes):
+            buffered = old.filter(pa.array(touched)).to_pandas()
+            history = pd.concat([buffered, batch], ignore_index=True)
+    # per key: its buffered rows in buffer order, then its batch rows
+    hist_codes = np.concatenate([old_codes, new_codes])
+    perm = np.argsort(hist_codes, kind="stable")
+    history, hist_codes = history.take(perm).reset_index(drop=True), hist_codes[perm]
+    starts = np.flatnonzero(np.r_[True, hist_codes[1:] != hist_codes[:-1]])
+    ends = np.r_[starts[1:], len(perm)]
+    n_bufs = np.add.reduceat((perm < len(old_codes)).astype(np.int64), starts)
+
+    vectorized = isinstance(agg_fn, VectorizedRowAgg)
+    parts: dict[str, list] = {c: [] for c in added_cols}
+    for a, b, n_buf in zip(starts.tolist(), ends.tolist(), n_bufs.tolist()):
+        h = history.iloc[a:b].reset_index(drop=True)
+        if vectorized:
+            added = agg_fn.fn(h, n_buf)
             for c in added_cols:
-                out_rows[c].append(vals[c])
-        for c in added_cols:
-            batch[c] = out_rows[c]
-    keep = keep_fn(history)
-    state.update((_dump_buf(keep),))
-    yield batch
+                parts[c].append(pd.Series(added[c].values))
+            continue
+        for j in range(n_buf, len(h)):
+            upto = h.iloc[: j + 1]
+            vals = agg_fn(upto[keep(upto, np.full(j + 1, j))])
+            for c in added_cols:
+                parts[c].append(vals[c])
+    for c in added_cols:
+        batch[c] = pd.concat(parts[c], ignore_index=True).values if vectorized else parts[c]
+
+    kept = _to_arrow(history[keep(history, np.repeat(ends - 1, ends - starts))])
+    if carried is not None and carried.num_rows:
+        kept = pa.concat_tables([carried, kept], promote_options="permissive").combine_chunks()
+    return batch, kept
+
+
+def _stream_over(
+    sdf: DataFrame,
+    partition_by: Sequence[str],
+    order_col: str,
+    agg_fn: RowAgg | VectorizedRowAgg,
+    added_fields: Sequence[T.StructField],
+    keep: Keep,
+) -> DataFrame:
+    keys, cols = list(partition_by), sdf.columns
+    buckets = STATE_PARTITIONS
+    out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
+    added = [f.name for f in added_fields]
+
+    def fn(_, pdfs, state):
+        old = None
+        if state.exists:
+            buf, stored = state.get
+            if stored != buckets:
+                raise ValueError(
+                    f"checkpointed over-window state has {stored} key buckets, "
+                    f"this stream {buckets}: resume with STATE_PARTITIONS = {stored}"
+                )
+            old = _load_table(buf)
+        out, kept = _over_bucket(
+            old, _concat(list(pdfs))[cols], keys, order_col, agg_fn, added, keep
+        )
+        state.update((_dump_table(kept), buckets))
+        yield out
+
+    bucket = F.pmod(F.hash(*keys), F.lit(buckets)) if keys else F.lit(0)
+    return (
+        sdf.withColumn(_BUCKET, bucket)
+        .groupBy(_BUCKET)
+        .applyInPandasWithState(fn, out_schema, _BUCKET_STATE, "append", "NoTimeout")
+    )
 
 
 def stream_over_by_size(
@@ -125,17 +261,11 @@ def stream_over_by_size(
     micro-batches (the reference throws OutOfOrderException otherwise —
     table/SlideTableByColumn.java:36-44; feed through a watermark/sorted
     source for the same guarantee)."""
-    out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
-    added = [f.name for f in added_fields]
 
-    def fn(key, pdfs, state):
-        yield from _run_buffered(
-            pdfs, state, order_col, agg_fn, added, lambda h: h.iloc[-n:]
-        )
+    def keep(h: pd.DataFrame, last: np.ndarray) -> np.ndarray:
+        return np.arange(len(h)) > last - n
 
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, out_schema, _BUF_SCHEMA, "append", "NoTimeout"
-    )
+    return _stream_over(sdf, partition_by, order_col, agg_fn, added_fields, keep)
 
 
 def stream_over_by_duration(
@@ -149,19 +279,12 @@ def stream_over_by_duration(
     """Streaming trailing time window: RANGE (duration-1) PRECEDING →
     CURRENT per key over an epoch-ms column (ref
     OverWindowByDuration.java:63-92 — buffer [t - size + 1, t])."""
-    out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
-    added = [f.name for f in added_fields]
 
-    def keep(h: pd.DataFrame) -> pd.DataFrame:
-        cutoff = h[time_col_ms].iloc[-1] - duration_ms + 1
-        return h[h[time_col_ms] >= cutoff]
+    def keep(h: pd.DataFrame, last: np.ndarray) -> np.ndarray:
+        t = h[time_col_ms].to_numpy()
+        return t >= t[last] - duration_ms + 1
 
-    def fn(key, pdfs, state):
-        yield from _run_buffered(pdfs, state, time_col_ms, agg_fn, added, keep)
-
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, out_schema, _BUF_SCHEMA, "append", "NoTimeout"
-    )
+    return _stream_over(sdf, partition_by, time_col_ms, agg_fn, added_fields, keep)
 
 
 SessionTransform = Callable[[tuple, pd.DataFrame, int, int], pd.DataFrame]

@@ -219,6 +219,114 @@ class TestStatefulOverWindows:
         assert got == want
 
 
+def _many_key_batches():
+    """Three micro-batches over 240 users, two rows per user per batch,
+    plus rows with a null user. Users >= 120 skip the middle batch.
+    Values are quarters, so double sums are exact in any order."""
+    batches = []
+    for b in range(3):
+        users = [*range(120 if b == 1 else 240), None]
+        rows = []
+        for i, u in enumerate(users):
+            for r in range(2):
+                eid = b * 10_000 + 2 * i + r
+                t = b * 100_000 + (eid * 37) % 9_973
+                rows.append((eid, u, ("click", "view")[(i + r) % 2], (eid % 13) / 4, t))
+        batches.append(rows)
+    return batches
+
+
+def _run_many_keys(spark, tmp_path, keys, build, name):
+    """Replay _many_key_batches through `build(sdf)`; returns the
+    output table, the batch frame of all rows and the last progress.
+    The middle batch reaches every bucket the first one fills, so the
+    buffers of the keys it skips are carried through a bucket call."""
+    from table_computing_spark.streaming.stateful import STATE_PARTITIONS
+
+    d = tmp_path / name
+    d.mkdir()
+    batches = _many_key_batches()
+    bucket = F.pmod(F.hash(*keys), F.lit(STATE_PARTITIONS))
+
+    def buckets(rows):
+        df = spark.createDataFrame(rows, EVENT_SCHEMA).select(bucket)
+        return {r[0] for r in df.distinct().collect()}
+
+    assert buckets(batches[1]) == buckets(batches[0])
+    for i, rows in enumerate(batches):
+        _write_events(d / f"b{i}.json", rows, i)
+    q = (
+        build(_read_stream(spark, str(d))).writeStream.format("memory")
+        .queryName(name).outputMode("append").trigger(availableNow=True).start()
+    )
+    _await_stream(q, 120)
+    assert len(q.recentProgress) >= 3
+    every = spark.createDataFrame([r for rows in batches for r in rows], EVENT_SCHEMA)
+    return spark.table(name), every, q.lastProgress
+
+
+class TestOverWindowKeyBuckets:
+    """Many keys share a bucket's state row: keys absent from a batch
+    keep their buffers, a null key and a two-column key are keys like
+    any other, and the state holds one row per bucket."""
+
+    def test_by_size_two_column_key_vectorized(self, spark, tmp_path):
+        import pandas as pd
+
+        from table_computing_spark.streaming.stateful import (
+            STATE_PARTITIONS,
+            VectorizedRowAgg,
+        )
+
+        def trailing(history, n_old):
+            roll = history["value"].rolling(3, min_periods=1)
+            return pd.DataFrame({
+                "tsum": roll.sum().iloc[n_old:].values,
+                "tn": roll.count().iloc[n_old:].astype("int64").values,
+            })
+
+        got, every, progress = _run_many_keys(
+            spark, tmp_path, ["user_id", "event_type"],
+            lambda sdf: stream_over_by_size(
+                sdf, ["user_id", "event_type"], "t_ms", 3, VectorizedRowAgg(trailing),
+                [T.StructField("tsum", T.DoubleType()), T.StructField("tn", T.LongType())],
+            ),
+            "t_obs_buckets",
+        )
+        expected = tw.over_by_size(
+            Table(every), ["user_id", "event_type"], [F.col("t_ms").asc()], n=3,
+            tsum=F.sum("value"), tn=F.count(F.lit(1)),
+        ).df
+        want = _rows(expected.select("event_id", "tsum", "tn"), "event_id")
+        assert len(want) == 2 * (241 + 121 + 241)
+        assert _rows(got.select("event_id", "tsum", "tn"), "event_id") == want
+        assert progress["stateOperators"][0]["numRowsTotal"] <= STATE_PARTITIONS
+
+    def test_by_duration_row_agg(self, spark, tmp_path):
+        from table_computing_spark.streaming.stateful import (
+            STATE_PARTITIONS,
+            stream_over_by_duration,
+        )
+
+        got, every, progress = _run_many_keys(
+            spark, tmp_path, ["user_id"],
+            lambda sdf: stream_over_by_duration(
+                sdf, ["user_id"], "t_ms", 250_000,
+                lambda buf: {"tsum": float(buf["value"].sum()), "tn": len(buf)},
+                [T.StructField("tsum", T.DoubleType()), T.StructField("tn", T.IntegerType())],
+            ),
+            "t_obd_buckets",
+        )
+        expected = tw.over_by_duration(
+            Table(every), ["user_id"], "t_ms", duration_ms=250_000,
+            tsum=F.sum("value"), tn=F.count(F.lit(1)),
+        ).df
+        want = _rows(expected.select("event_id", "tsum", "tn"), "event_id")
+        assert len(want) == 2 * (241 + 121 + 241)
+        assert _rows(got.select("event_id", "tsum", "tn"), "event_id") == want
+        assert progress["stateOperators"][0]["numRowsTotal"] <= STATE_PARTITIONS
+
+
 def test_state_buffer_codec_roundtrips_exactly():
     """_load_buf(_dump_buf(df)) returns the frame unchanged: int64
     extremes, doubles at the edge of precision, strings with None,
@@ -1164,6 +1272,42 @@ class TestCheckpointRecovery:
         ).df
         got = sorted((r["event_id"], r["trailing_sum"]) for r in first + second)
         assert got == _rows(expected.select("event_id", "trailing_sum"), "event_id")
+
+    def test_resume_with_other_bucket_count_raises(self, spark, tmp_path, monkeypatch):
+        """The bucket state records its bucket count. Spark cannot tell
+        a checkpoint written under another count (the bucket key is an
+        int either way), so the first bucket call raises naming both
+        counts, before it emits a row."""
+        from table_computing_spark.streaming import stateful
+
+        src = tmp_path / "src"
+        src.mkdir()
+        ckpt = str(tmp_path / "ckpt")
+        rows = [(i, i % 40, "click", 1.0, 1_000 + i) for i in range(80)]
+        emitted = []
+
+        def run():
+            out = stream_over_by_size(
+                _read_stream(spark, str(src)), ["user_id"], "t_ms", 3,
+                lambda buf: {"tn": len(buf)}, [T.StructField("tn", T.IntegerType())],
+            )
+            q = (
+                out.writeStream.foreachBatch(lambda df, _: emitted.extend(df.collect()))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_stream(q, 120)
+
+        _write_events(src / "b0.json", rows[:40])
+        run()
+        assert len(emitted) == 40
+
+        _write_events(src / "b1.json", rows[40:], 1)
+        monkeypatch.setattr(stateful, "STATE_PARTITIONS", 4)
+        with pytest.raises(Exception, match="has 8 key buckets, this stream 4"):
+            run()
+        assert len(emitted) == 40
 
 
 def test_streaming_cms_equals_batch_sketch(spark, stream_dir):
