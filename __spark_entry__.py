@@ -1691,7 +1691,9 @@ class _state_partitions:
     scales out by key hash). That also raises the key-bucket count of
     stream_over_by_size / stream_over_by_duration, whose state
     parallelism it caps; both counts are fixed for a checkpoint's
-    life, as Spark fixes its partition count."""
+    life, as Spark fixes its partition count, so raise it only when
+    starting a new checkpoint (a raised bucket count is not always
+    caught on resume; see STATE_PARTITIONS)."""
 
     def __init__(self, spark):
         self.spark = spark

@@ -16,7 +16,9 @@ bucket it touches, not one per key: pyspark's per-group plumbing
 (per-column Arrow → pandas, GroupState, the state frame) is paid once.
 Within the call the user's function still sees one key's history at a
 time, and rows of keys absent from the batch are carried as Arrow
-bytes without becoming pandas rows.
+bytes without becoming pandas rows. Rows are matched to keys on an
+exact key string Spark builds next to the bucket (`_exact_key`), not on
+the key values pandas received.
 
 State is buffered rows as one Arrow IPC stream in a binary field
 (`_dump_buf` / `_load_buf`) — schema-stable across arbitrary input
@@ -40,7 +42,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,7 +51,10 @@ STATE_PARTITIONS = 8
 (`__spark_entry__._state_partitions`) and the key-bucket count of the
 trailing-window operators, read when a stream is built. Both are fixed
 for a checkpoint's life: Spark keeps the partition count it started
-with, and a bucket state written under another count raises."""
+with, and a bucket call that finds state written under another count
+raises. After a raise, a micro-batch whose keys all hash to buckets the
+old count did not have finds no state and is served on empty history,
+so raise the count only on a new checkpoint."""
 
 RowAgg = Callable[[pd.DataFrame], dict[str, Any]]
 """(trailing buffer ending at the current row) → {output col → value} —
@@ -105,6 +110,11 @@ _BUCKET_STATE = T.StructType(
     [T.StructField("buf", T.BinaryType()), T.StructField("buckets", T.IntegerType())]
 )
 _BUCKET = "__bucket"
+_KEY = "__key"
+_EXACT_JSON = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 Keep = Callable[[pd.DataFrame, np.ndarray], np.ndarray]
 """(key-sorted history, position of each row's key's last row) → mask
@@ -117,74 +127,75 @@ def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame:
     return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
-def _key_codes(keys: list[str], old: pa.Table | None, batch: pd.DataFrame) -> np.ndarray:
-    """One int code in [0, n) per row of `old` then `batch`, equal iff
-    the rows' key columns are equal (null equals null). Computed in Arrow,
-    so `old`'s rows never become pandas rows."""
-    n = (0 if old is None else old.num_rows) + len(batch)
-    codes = np.zeros(n, dtype=np.int64)
-    for i, k in enumerate(keys):
-        new = pa.array(batch[k].to_numpy(), from_pandas=True)
-        if old is None:
-            col = pa.chunked_array([new])
-        else:
-            prev = old.column(k)
-            if prev.type != new.type:  # e.g. a long key with a null arrives as double
-                t = pa.unify_schemas(
-                    [pa.schema([(k, prev.type)]), pa.schema([(k, new.type)])],
-                    promote_options="permissive",
-                ).field(k).type
-                prev, new = prev.cast(t), new.cast(t)
-            col = pa.chunked_array(prev.chunks + [new])
-        enc = pc.dictionary_encode(col, null_encoding="encode")
-        idx = np.concatenate([c.indices.to_numpy() for c in enc.chunks]).astype(np.int64)
-        codes = codes * len(enc.chunks[-1].dictionary) + idx
-        if i:
-            codes = pd.factorize(codes)[0]  # dense again: codes stay < n
-    return codes
+def _exact_key(sdf: DataFrame, keys: list[str]) -> Column:
+    """The key columns as one string that is equal iff Spark groups the
+    rows together: JSON with microsecond timestamps and -0.0 written as
+    0.0. Python matches keys on it, because pyspark hands a long column
+    holding a null to pandas as float64 (2**60 + 1 == 2**60 + 2 there)
+    and NaN and null both as NaN."""
+    cols = []
+    for k in keys:
+        c, t = F.col(k), sdf.schema[k].dataType
+        if isinstance(t, (T.FloatType, T.DoubleType)):
+            c = F.when(c == 0, F.lit(0).cast(t)).otherwise(c)
+        cols.append(c.alias(k))
+    return F.to_json(F.struct(*cols), _EXACT_JSON) if keys else F.lit("")
+
+
+def _stack(a: pa.Table, b: pa.Table) -> pa.Table:
+    """`a`'s rows, then `b`'s. pandas types a column by what one batch
+    holds (a long column with a null is float64, an all-null string
+    column has no type), so the two may differ: unify them without
+    Arrow's safe-cast check, which refuses a long above 2**53."""
+    if a.schema != b.schema:
+        s = pa.unify_schemas([a.schema, b.schema], promote_options="permissive")
+        a, b = a.cast(s, safe=False), b.cast(s, safe=False)
+    return pa.concat_tables([a, b]).combine_chunks()
 
 
 def _over_bucket(
     old: pa.Table | None,
     batch: pd.DataFrame,
-    keys: list[str],
     order_col: str,
     agg_fn: RowAgg | VectorizedRowAgg,
     added_cols: list[str],
     keep: Keep,
 ) -> tuple[pd.DataFrame, pa.Table]:
     """One micro-batch of one bucket: `old` holds the bucket's buffered
-    rows, `batch` its new rows. Returns the batch rows with the added
-    columns, and the rows to buffer.
+    rows, `batch` its new rows, both with their exact key in `__key`.
+    Returns the batch rows with the added columns (and `__key` last),
+    and the rows to buffer.
 
     Each key present in the batch gets its history — its buffered rows
     in buffer order, then its batch rows stably sorted on `order_col` —
     and `agg_fn` runs once per key on it. Buffered rows of keys absent
     from the batch are carried over in Arrow."""
-    n_old = 0 if old is None else old.num_rows
-    codes = _key_codes(keys, old, batch)
-    old_codes, new_codes = codes[:n_old], codes[n_old:]
+    new_keys = batch.pop(_KEY).to_numpy()
+    keys = pa.array(new_keys, type=pa.string())
+    carried = None
+    if old is not None:
+        touched = pc.is_in(old.column(_KEY), value_set=keys)
+        carried, old = old.filter(pc.invert(touched)), old.filter(touched)
+        keys = pa.concat_arrays([*old.column(_KEY).chunks, keys])
+    enc = pc.dictionary_encode(keys)
+    codes = enc.indices.to_numpy()
+    n_touched = len(codes) - len(batch)
+    old_codes, new_codes = codes[:n_touched], codes[n_touched:]
     # the batch by key, then stably by order_col
     order = batch[order_col].reset_index(drop=True).sort_values(kind="mergesort").index.to_numpy()
     order = order[np.argsort(new_codes[order], kind="stable")]
     batch, new_codes = batch.take(order).reset_index(drop=True), new_codes[order]
-    history, carried = batch, None
-    if n_old:
-        hit = np.zeros(int(codes.max()) + 1, dtype=bool)
-        hit[new_codes] = True
-        touched = hit[old_codes]
-        carried = old.filter(pa.array(~touched))
-        old_codes = old_codes[touched]
-        if len(old_codes):
-            buffered = old.filter(pa.array(touched)).to_pandas()
-            history = pd.concat([buffered, batch], ignore_index=True)
+    new_keys = new_keys[order]
+    history = batch
+    if n_touched:
+        history = pd.concat([old.drop_columns([_KEY]).to_pandas(), batch], ignore_index=True)
     # per key: its buffered rows in buffer order, then its batch rows
     hist_codes = np.concatenate([old_codes, new_codes])
     perm = np.argsort(hist_codes, kind="stable")
     history, hist_codes = history.take(perm).reset_index(drop=True), hist_codes[perm]
     starts = np.flatnonzero(np.r_[True, hist_codes[1:] != hist_codes[:-1]])
     ends = np.r_[starts[1:], len(perm)]
-    n_bufs = np.add.reduceat((perm < len(old_codes)).astype(np.int64), starts)
+    n_bufs = np.add.reduceat((perm < n_touched).astype(np.int64), starts)
 
     vectorized = isinstance(agg_fn, VectorizedRowAgg)
     parts: dict[str, list] = {c: [] for c in added_cols}
@@ -202,10 +213,12 @@ def _over_bucket(
                 parts[c].append(vals[c])
     for c in added_cols:
         batch[c] = pd.concat(parts[c], ignore_index=True).values if vectorized else parts[c]
+    batch[_KEY] = new_keys
 
-    kept = _to_arrow(history[keep(history, np.repeat(ends - 1, ends - starts))])
+    mask = keep(history, np.repeat(ends - 1, ends - starts))
+    kept = _to_arrow(history[mask]).append_column(_KEY, enc.dictionary.take(hist_codes[mask]))
     if carried is not None and carried.num_rows:
-        kept = pa.concat_tables([carried, kept], promote_options="permissive").combine_chunks()
+        kept = _stack(carried, kept)
     return batch, kept
 
 
@@ -219,7 +232,8 @@ def _stream_over(
 ) -> DataFrame:
     keys, cols = list(partition_by), sdf.columns
     buckets = STATE_PARTITIONS
-    out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields))
+    key_field = T.StructField(_KEY, T.StringType())
+    out_schema = T.StructType(list(sdf.schema.fields) + list(added_fields) + [key_field])
     added = [f.name for f in added_fields]
 
     def fn(_, pdfs, state):
@@ -233,17 +247,22 @@ def _stream_over(
                 )
             old = _load_table(buf)
         out, kept = _over_bucket(
-            old, _concat(list(pdfs))[cols], keys, order_col, agg_fn, added, keep
+            old, _concat(list(pdfs))[[*cols, _KEY]], order_col, agg_fn, added, keep
         )
         state.update((_dump_table(kept), buckets))
         yield out
 
     bucket = F.pmod(F.hash(*keys), F.lit(buckets)) if keys else F.lit(0)
-    return (
-        sdf.withColumn(_BUCKET, bucket)
+    out = (
+        sdf.withColumn(_KEY, _exact_key(sdf, keys))
+        .withColumn(_BUCKET, bucket)
         .groupBy(_BUCKET)
         .applyInPandasWithState(fn, out_schema, _BUCKET_STATE, "append", "NoTimeout")
     )
+    # a long key that pandas held as float64 comes back exact from its key
+    longs = T.StructType([sdf.schema[k] for k in keys if sdf.schema[k].dataType == T.LongType()])
+    exact = F.from_json(_KEY, longs)
+    return out.select(*[exact[c].alias(c) if c in longs.names else c for c in cols], *added)
 
 
 def stream_over_by_size(

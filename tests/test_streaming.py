@@ -11,6 +11,7 @@ replayable. `maxFilesPerTrigger=1` makes each file one micro-batch.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 
@@ -325,6 +326,48 @@ class TestOverWindowKeyBuckets:
         assert len(want) == 2 * (241 + 121 + 241)
         assert _rows(got.select("event_id", "tsum", "tn"), "event_id") == want
         assert progress["stateOperators"][0]["numRowsTotal"] <= STATE_PARTITIONS
+
+    @pytest.mark.parametrize(
+        "key, values",
+        [("user_id", [2**60 + 1, 2**60 + 2, None]), ("value", [0.0, -0.0, math.nan, None, 1.5])],
+    )
+    def test_keys_match_as_spark_groups_them(self, spark, tmp_path, monkeypatch, key, values):
+        """One bucket holds every key. pandas gets a long column with a
+        null as float64, where 2**60 + 1 and 2**60 + 2 are one number,
+        and NaN and null both as NaN; the keys still match as Spark
+        groups them (-0.0 with 0.0), and long keys come out exact. The
+        first batch has no null, so the state holds exact longs when the
+        null arrives."""
+        from table_computing_spark.streaming import stateful
+
+        monkeypatch.setattr(stateful, "STATE_PARTITIONS", 1)
+        d = tmp_path / "src"
+        d.mkdir()
+        batches = []
+        for b in range(3):
+            batch = []
+            for i, v in enumerate(values if b else [v for v in values if v is not None]):
+                for r in range(2):
+                    eid = b * 100 + 2 * i + r
+                    user, value = (v, 1.0) if key == "user_id" else (7, v)
+                    batch.append((eid, user, "click", value, b * 1_000 + eid))
+            _write_events(d / f"b{b}.json", batch, b)
+            batches.append(batch)
+        out = stream_over_by_size(
+            _read_stream(spark, str(d)), [key], "t_ms", 3,
+            lambda buf: {"tsum": int(buf["t_ms"].sum()), "tn": len(buf)},
+            [T.StructField("tsum", T.LongType()), T.StructField("tn", T.IntegerType())],
+        )
+        got = _run_to_table(spark, out, f"t_exact_{key}")
+        every = spark.createDataFrame([r for b in batches for r in b], EVENT_SCHEMA)
+        expected = tw.over_by_size(
+            Table(every), [key], [F.col("t_ms").asc()], n=3,
+            tsum=F.sum("t_ms"), tn=F.count(F.lit(1)),
+        ).df
+        cols = ("event_id", "user_id", "tsum", "tn")
+        want = _rows(expected.select(*cols), "event_id")
+        assert len({r[1:] for r in want}) > len(values)  # keys kept apart
+        assert _rows(got.select(*cols), "event_id") == want
 
 
 def test_state_buffer_codec_roundtrips_exactly():
@@ -1273,11 +1316,17 @@ class TestCheckpointRecovery:
         got = sorted((r["event_id"], r["trailing_sum"]) for r in first + second)
         assert got == _rows(expected.select("event_id", "trailing_sum"), "event_id")
 
-    def test_resume_with_other_bucket_count_raises(self, spark, tmp_path, monkeypatch):
+    @pytest.mark.parametrize("before, after", [(8, 4), (4, 8)])
+    def test_resume_with_other_bucket_count_raises(
+        self, spark, tmp_path, monkeypatch, before, after
+    ):
         """The bucket state records its bucket count. Spark cannot tell
         a checkpoint written under another count (the bucket key is an
-        int either way), so the first bucket call raises naming both
-        counts, before it emits a row."""
+        int either way), so a call on a bucket with state raises naming
+        both counts, before the micro-batch emits a row. Raised, the
+        count is caught only because some of the batch's keys hash to a
+        bucket below the old count: a batch touching only the new
+        buckets would find no state (STATE_PARTITIONS docstring)."""
         from table_computing_spark.streaming import stateful
 
         src = tmp_path / "src"
@@ -1299,13 +1348,14 @@ class TestCheckpointRecovery:
             )
             _await_stream(q, 120)
 
+        monkeypatch.setattr(stateful, "STATE_PARTITIONS", before)
         _write_events(src / "b0.json", rows[:40])
         run()
         assert len(emitted) == 40
 
         _write_events(src / "b1.json", rows[40:], 1)
-        monkeypatch.setattr(stateful, "STATE_PARTITIONS", 4)
-        with pytest.raises(Exception, match="has 8 key buckets, this stream 4"):
+        monkeypatch.setattr(stateful, "STATE_PARTITIONS", after)
+        with pytest.raises(Exception, match=f"has {before} key buckets, this stream {after}"):
             run()
         assert len(emitted) == 40
 
