@@ -15,6 +15,9 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
+import textwrap
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -120,3 +123,66 @@ def test_multi_count_distinct_fingerprint_is_exprid_stable(spark):
         F.countDistinct("v", "w").alias("dvw"),
     )
     assert plan_fingerprint(other) != before
+
+
+def _core_count_frames(spark) -> dict:
+    """Three frames whose plans carry a partition count Spark derives
+    from the core count: `_spread`'s round-robin Exchange, a Range
+    without `numPartitions`, and a keyed repartition to
+    defaultParallelism."""
+    from table_computing_spark.operators._util import _spread
+
+    dp = spark.sparkContext.defaultParallelism
+    one_split = spark.range(100, numPartitions=1)
+    return {
+        "spread": _spread(one_split),
+        "range": spark.range(10),
+        "keyed_repartition": one_split.repartition(dp, "id"),
+    }
+
+
+_CORE_COUNT_PROBE = textwrap.dedent(
+    """
+    import json, sys
+    sys.path[:0] = [sys.argv[1], sys.argv[2]]
+    from table_computing_spark.plans import plan_fingerprint
+    from table_computing_spark.session import get_spark
+    from test_plan_fingerprints import _core_count_frames
+
+    spark = get_spark("plan-fingerprint-cores", **{"spark.sql.shuffle.partitions": "8"})
+    shas = {k: plan_fingerprint(df) for k, df in _core_count_frames(spark).items()}
+    spark.stop()
+    print(json.dumps(shas))
+    """
+)
+
+
+def test_plan_fingerprint_is_core_count_invariant(spark, tmp_path):
+    """The same frames built in a session with a different core count
+    fingerprint identically: partition counts derived from
+    defaultParallelism are normalized, so a baseline promoted on a
+    32-core host still matches a capture on an 8-core one. Literal
+    counts keep their sensitivity."""
+    import pytest
+
+    from table_computing_spark.plans import plan_fingerprint
+
+    dp = spark.sparkContext.defaultParallelism
+    if dp < 2:
+        pytest.skip("local[1]: a literal 1-split source is indistinguishable from the core count")
+    here = {k: plan_fingerprint(df) for k, df in _core_count_frames(spark).items()}
+    script = tmp_path / "probe.py"
+    script.write_text(_CORE_COUNT_PROBE)
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(dp + 2), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(script), ROOT, os.path.join(ROOT, "tests")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    there = json.loads(out.stdout.strip().splitlines()[-1])
+    assert "na" not in here.values()
+    assert there == here
+
+    base = spark.range(100, numPartitions=1)
+    k = dp + 1
+    assert plan_fingerprint(base.repartition(k)) != plan_fingerprint(base.repartition(k + 1))
