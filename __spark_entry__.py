@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from table_computing_spark import functions as tcf
 from table_computing_spark.operators import windows as tw
+from table_computing_spark.session import scratch_dir
 from table_computing_spark.sources.parquet import load_table, stream_df
 
 # ---------------------------------------------------------------------------
@@ -1437,13 +1438,13 @@ def q_minhash_accuracy(spark, sf_dir):
     the census — same scoping precedent as q_jaccard_prefix.
     (New r08.)"""
     from table_computing_spark.operators import dedup
-    from table_computing_spark.operators._util import _reuse
+    from table_computing_spark.operators._util import materialize
 
     d = _t(spark, sf_dir, "documents").df.filter(F.col("doc_id") % 10 == 0)
     # the exact pair set feeds BOTH the estimate's pair list and the
     # final audit join — materialize once so the inverted-index
     # Jaccard join doesn't execute twice (guide §6)
-    exact = _reuse(dedup.ngram_jaccard_pairs(d, threshold=0.5))
+    exact = materialize(dedup.ngram_jaccard_pairs(d, threshold=0.5), eager=False)
     est = dedup.minhash_estimate_pairs(
         d, exact.select("id_a", "id_b"), use_tokens=True
     )
@@ -1525,7 +1526,7 @@ def q_stream_running_balance(spark, sf_dir):
     # two real micro-batches prove the cross-batch state carry without
     # paying a min/max scan or a third batch cycle
     cut = 899_856_000_000  # 1998-07-08 UTC in epoch ms
-    _, sdf = _replay_slices(li, [F.col("ms") <= cut, F.col("ms") > cut], "tc_srb_")
+    _, sdf = _replay_slices(li, [F.col("ms") <= cut, F.col("ms") > cut])
     out = stream_running_balance(
         sdf, ["l_partkey"], ["ms", "l_orderkey", "l_linenumber"], "delta"
     )
@@ -1722,12 +1723,15 @@ def _run_stream_to_df(spark, sdf, mode="complete"):
         .start()
     )
     _await_stream(q)
-    return spark.table(name)
+    # the bound frame keeps reading the sink; drop the session-wide view
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
-def _replay_slices(df, conds, prefix):
+def _replay_slices(df, conds):
     """`df` replayed as a parquet file stream, one micro-batch per
-    condition, in order. Returns (base, sdf): a fresh temp dir (the
+    condition, in order. Returns (base, sdf): a fresh scratch dir (the
     slices sit in `base/deltas`; callers put state and checkpoints
     beside them) and the maxFilesPerTrigger=1 stream.
 
@@ -1737,7 +1741,7 @@ def _replay_slices(df, conds, prefix):
     one mtime, and the source's tie-break processed them out of order
     (measured on q_stream_page_hinkley: batch 3 first, state extended
     from the wrong end)."""
-    base = tempfile.mkdtemp(prefix=prefix)
+    base = scratch_dir()
     src = os.path.join(base, "deltas")
     for cond in conds:
         df.where(cond).coalesce(1).write.mode("append").parquet(src)
@@ -4133,9 +4137,7 @@ def q_stream_matview(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").df.select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_matview_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     measures = {"revenue": F.col("o_totalprice").cast("decimal(30,4)")}
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
@@ -4954,9 +4956,7 @@ def q_stream_bitmap_distinct(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").df.select(
         "o_orderkey", "o_orderpriority", "o_custkey"
     )
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_bmdist_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     with _state_partitions(spark):
         q = matview.stream_maintain_distinct(
             sdf,
@@ -5068,9 +5068,7 @@ def q_stream_tdigest(spark, sf_dir):
     from table_computing_spark.streaming import matview
 
     o = _t(spark, sf_dir, "orders").df.select("o_orderkey", "o_totalprice")
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_tdstream_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     with _state_partitions(spark):
         q = matview.stream_maintain_tdigest(
             sdf, "o_totalprice", os.path.join(base, "state"),
@@ -5436,9 +5434,7 @@ def q_stream_fingerprint(spark, sf_dir):
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     o = _t(spark, sf_dir, "orders").df.select("o_orderstatus", *cols)
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_sfp_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     measures = {"hsum": row_hash(cols).cast("decimal(28,0)")}
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
@@ -5511,9 +5507,7 @@ def q_stream_kmv(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").df.select(
         "event_type", "user_id", "event_id"
     )
-    base, sdf = _replay_slices(
-        ev, [F.col("event_id") % 3 == i for i in range(3)], "tc_skmv_"
-    )
+    base, sdf = _replay_slices(ev, [F.col("event_id") % 3 == i for i in range(3)])
     with _state_partitions(spark):
         q = matview.stream_maintain_kmv(
             sdf,
@@ -6150,7 +6144,6 @@ def q_stream_page_hinkley(spark, sf_dir):
             (F.col("event_id") >= cuts[0]) & (F.col("event_id") < cuts[1]),
             F.col("event_id") >= cuts[1],
         ],
-        "tc_sph_",
     )
     out = stream_page_hinkley(
         sdf, ["event_type"], "event_id", "mval", delta=0.0, lam=500.0
@@ -6228,9 +6221,7 @@ def q_stream_sprt(spark, sf_dir):
         (F.col("o_orderstatus") == "F").cast("long").alias("y"),
         "o_orderkey",
     )
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_ssprt_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     sdf = sdf.select("arm", "y")
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
@@ -6397,9 +6388,7 @@ def q_stream_topk(spark, sf_dir):
     from table_computing_spark.streaming import matview
 
     ev = _t(spark, sf_dir, "events").df.select("event_type", "user_id", "event_id")
-    base, sdf = _replay_slices(
-        ev, [F.col("event_id") % 3 == i for i in range(3)], "tc_stopk_"
-    )
+    base, sdf = _replay_slices(ev, [F.col("event_id") % 3 == i for i in range(3)])
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(
             sdf,
@@ -6970,9 +6959,7 @@ def q_stream_eval(spark, sf_dir):
         .alias("pred"),
         F.col("o_orderkey"),
     )
-    base, sdf = _replay_slices(
-        o, [F.col("o_orderkey") % 3 == i for i in range(3)], "tc_seval_"
-    )
+    base, sdf = _replay_slices(o, [F.col("o_orderkey") % 3 == i for i in range(3)])
     sdf = sdf.select("label", "pred")
     with _state_partitions(spark):
         q = matview.stream_maintain_agg(

@@ -591,12 +591,11 @@ def _bench_streaming(spark, sf_dir: str, n_slices: int = 6) -> dict:
     overall rows/s, steady-state rows/s (batches after the first —
     batch 1 amortizes stream start), and the per-batch duration spread
     from the engine's own progress metrics."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from __spark_entry__ import _await_stream
 
+    from table_computing_spark.session import scratch_dir
     from table_computing_spark.streaming.windows import stream_tumble
 
     try:
@@ -610,7 +609,7 @@ def _bench_streaming(spark, sf_dir: str, n_slices: int = 6) -> dict:
         # slice by event time (range partition on t_ms), one file per
         # slice: arrival order == event-time order, so the watermark
         # advances across batches exactly like a live ingest
-        src_dir = tempfile.mkdtemp(prefix="tc_bench_stream_src_")
+        src_dir = scratch_dir("tc_bench_stream_src_")
         (
             ev.withColumn("t_ms", t_ms)
             .repartitionByRange(n_slices, "t_ms")
@@ -633,7 +632,7 @@ def _bench_streaming(spark, sf_dir: str, n_slices: int = 6) -> dict:
         q = (
             out.writeStream.format("noop")
             .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="tc_bench_ckpt_"))
+            .option("checkpointLocation", scratch_dir("tc_bench_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )

@@ -3,8 +3,6 @@ verbatim copies across bootstrap.py, dedup.py and spatial.py)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -27,36 +25,30 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _reuse(df: DataFrame) -> DataFrame:
-    """Materialize-once marker for a subtree consumed by several
-    downstream branches at different projection boundaries (where
-    ReusedExchange cannot help): grid_dbscan's pairs/sym/flagged and
-    simhash_pairs' fingerprint frame.
+def is_local_master(master: str) -> bool:
+    """True for `local` and `local[...]`: the only executor is the
+    driver's own JVM, so no executor can be lost on its own. False for
+    `local-cluster[...]` (separate executor JVMs), `spark://`, `yarn`
+    and `k8s://`."""
+    return master == "local" or master.startswith("local[")
 
-    Two engines, same materialize-once-per-action semantics:
 
-    - ``checkpoint`` (local default): lazy ``localCheckpoint`` —
-      cheapest locally (no storage-memory accounting, blocks freed by
-      the context cleaner), but it TRUNCATES LINEAGE, so on a
-      multi-executor cluster a lost executor makes the blocks
-      unrecoverable and fails the job (r14 verdict item 4).
-    - ``persist``: ``MEMORY_AND_DISK`` persist — same reuse, keeps
-      lineage, so executor loss recomputes instead of failing; the
-      right setting for fault-tolerant 100 TB runs.
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize `df` and truncate its lineage: the one policy for a
+    subtree that several branches reuse (grid_dbscan's pairs/sym/flagged,
+    simhash_pairs' fingerprints) or that an iterative loop re-reads
+    (graph rounds, BPE vocab).
 
-    r15 A/B at sf0.1 (certified-quiet, alternating): statistically
-    indistinguishable locally (grid_dbscan 3.48 vs 3.49 s warm,
-    simhash_pairs within noise), so the env knob is availability
-    policy, not performance: set SPARK_GRAFT_REUSE=persist on
-    clusters. NOT result caching: the materialization lives only
-    within one query execution's action set and is dropped with the
-    DataFrame (bench/oracle runs clear all persistent RDDs between
-    queries)."""
-    if os.environ.get("SPARK_GRAFT_REUSE", "checkpoint") == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=False)
+    On a local master this is ``localCheckpoint`` — cheapest (no file
+    I/O, blocks freed by the context cleaner) and safe, because the
+    blocks live in the only executor there is. On any other master it is
+    a reliable ``checkpoint`` into Spark's ``spark.checkpoint.dir``, so
+    losing an executor cannot lose the truncated data; Spark raises when
+    that dir is unset. Use ``df.transform(materialize, eager=...)``
+    inside method chains."""
+    if is_local_master(df.sparkSession.sparkContext.master):
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)
 
 
 def _broadcast_threshold_bytes(spark) -> int:

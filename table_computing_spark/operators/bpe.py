@@ -53,6 +53,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 END_OF_WORD = "▁"  # sentinel glued to the word end (SentencePiece-style)
 
 
@@ -167,8 +169,8 @@ def _safe_prefix(top_rows, pairs: DataFrame, budget: int):
 
 
 def _swap_checkpoint(df: DataFrame, prev_ids: "set[int]"):
-    """Eagerly localCheckpoint `df`, then release the storage blocks of
-    the PREVIOUS checkpoint (`prev_ids` = its RDD ids). localCheckpoint
+    """Eagerly materialize `df`, then release the storage blocks of
+    the PREVIOUS checkpoint (`prev_ids` = its RDD ids). The checkpoint
     truncates lineage — which the vocab loop needs — but its blocks
     survive catalog.clearCache(), so superseded checkpoints otherwise
     accumulate for the session lifetime: the q_bpe_merges warm-inversion
@@ -178,7 +180,7 @@ def _swap_checkpoint(df: DataFrame, prev_ids: "set[int]"):
     released, so there is no recomputation window. Returns
     (checkpointed df, its RDD ids)."""
     sc = df.sparkSession.sparkContext
-    out = df.localCheckpoint()
+    out = materialize(df)
     # The checkpointed RDD is the one under the returned plan's
     # LogicalRDD. Diffing the session's persistent RDDs around the call
     # instead would also claim RDDs that other threads persisted
@@ -196,7 +198,7 @@ def _swap_checkpoint(df: DataFrame, prev_ids: "set[int]"):
             jrdd = jmap.get(rid)
             if jrdd is not None:
                 jrdd.unpersist()
-    except Exception:  # noqa: BLE001
+    except Py4JError:
         pass
     return out, new_ids
 

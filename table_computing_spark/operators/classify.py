@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
 from table_computing_spark.operators.text import tokens
 
 
@@ -47,7 +48,6 @@ def nb_train(
                    (tot_y + alpha*|V|))
     Both stay distributed; join them into a scoring plan via nb_score.
     """
-    from table_computing_spark.operators._util import _reuse
 
     tok = df.select(
         F.col(label_col).alias("__y"), F.explode(tokens(F.col(text_col))).alias("__tok")
@@ -60,8 +60,8 @@ def nb_train(
     # vocab subtree in the final plan (3 corpus explodes -> 1). Every
     # token row carries some __y (NULL labels group as a class), so
     # distinct __tok over class_tok is exactly distinct __tok over tok.
-    class_tok = _reuse(
-        tok.groupBy("__y", "__tok").agg(F.count(F.lit(1)).alias("__n"))
+    class_tok = materialize(
+        tok.groupBy("__y", "__tok").agg(F.count(F.lit(1)).alias("__n")), eager=False
     )
     vocab = class_tok.select("__tok").distinct()
     vocab_size = vocab.count()
@@ -506,20 +506,16 @@ def decision_stump(
     wall = W.partitionBy("feature")
     # pre (per-value aggregate + two window passes) feeds the gain
     # candidates AND the final n_left join-back — materialize once
-    from table_computing_spark.operators._util import _reuse
-
-    pre = _reuse(
-        per.select(
-            "feature",
-            "__v",
-            F.sum("__c").over(w).alias("__nl"),
-            F.sum("__s").over(w).alias("__sl"),
-            F.sum("__q").over(w).alias("__ql"),
-            F.sum("__c").over(wall).alias("__n"),
-            F.sum("__s").over(wall).alias("__sn"),
-            F.sum("__q").over(wall).alias("__qn"),
-        )
-    )
+    pre = per.select(
+        "feature",
+        "__v",
+        F.sum("__c").over(w).alias("__nl"),
+        F.sum("__s").over(w).alias("__sl"),
+        F.sum("__q").over(w).alias("__ql"),
+        F.sum("__c").over(wall).alias("__n"),
+        F.sum("__s").over(wall).alias("__sn"),
+        F.sum("__q").over(wall).alias("__qn"),
+    ).transform(materialize, eager=False)
     d = lambda c: c.cast("double")  # noqa: E731
     sse_all = d(F.col("__qn")) - d(F.col("__sn")) * d(F.col("__sn")) / d(F.col("__n"))
     sse_l = d(F.col("__ql")) - d(F.col("__sl")) * d(F.col("__sl")) / d(F.col("__nl"))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from table_computing_spark.operators._util import _reuse, _spread
+from table_computing_spark.operators._util import _spread, materialize
 from table_computing_spark.operators.text import fingerprint, shingles, tokens
 
 
@@ -383,11 +383,10 @@ def simhash_pairs(
         )
     # fps feeds BOTH the probe and build branches with different
     # projections, so without a materialize-once cut the fingerprint
-    # computation (shingle hash + 64 bit-votes) runs twice; _reuse
-    # materializes it once (r14 alternating A/B: faster all 4 rounds,
-    # output identical — same house pattern as grid_dbscan) and carries
-    # the cluster fault-tolerance knob (r15, _util._reuse docstring).
-    fps = _reuse(simhash(df, text_col, id_col).withColumnRenamed(id_col, "__id"))
+    # computation (shingle hash + 64 bit-votes) runs twice;
+    # materializing it once measured faster (r14 alternating A/B: all 4
+    # rounds, output identical — same house pattern as grid_dbscan).
+    fps = materialize(simhash(df, text_col, id_col).withColumnRenamed(id_col, "__id"), eager=False)
     cmask = (1 << chunk_bits) - 1
 
     def chunk_val(i: int) -> F.Column:

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from table_computing_spark.operators._util import _reuse
+from table_computing_spark.operators._util import materialize
 
 _EPS = 1e-6
 
@@ -1190,11 +1190,11 @@ def kruskal_wallis(
         F.col(group_col).alias("__g"), value_col.cast("double").alias("__v")
     ).filter(F.col("__g").isNotNull() & F.col("__v").isNotNull())
     dec = "decimal(38,0)"
-    # materialize the distinct-value count table once (_reuse, the
+    # materialize the distinct-value count table once (the
     # cvm/wasserstein pattern): it feeds BOTH the prefix build and the
     # tie-correction aggregate — without the cut the s-scan + __v
     # shuffle executes twice
-    per_v = _reuse(s.groupBy("__v").agg(F.count(F.lit(1)).alias("__n")))
+    per_v = materialize(s.groupBy("__v").agg(F.count(F.lit(1)).alias("__n")), eager=False)
     pre = prefix_agg(
         per_v, order_by=["__v"], specs={"__cb": ("sum", "__n")}, exclusive=True
     )
@@ -1325,7 +1325,7 @@ def levene_bf(
     ).filter(F.col("__g").isNotNull() & F.col("__x").isNotNull())
     # per_gv feeds the prefix build AND the group totals (the
     # kruskal/cvm pattern) — materialize once
-    per_gv = _reuse(s.groupBy("__g", "__x").agg(F.count(F.lit(1)).alias("__c")))
+    per_gv = materialize(s.groupBy("__g", "__x").agg(F.count(F.lit(1)).alias("__c")), eager=False)
     pre = prefix_agg(
         per_gv,
         order_by=["__x"],
@@ -1777,7 +1777,7 @@ def _sample_sizes(per: DataFrame, fn: str, undefined: str) -> tuple[int, int]:
     them from the prefix pass (max of the running sum) re-executed the
     whole prefix window+join chain once per call just for two scalars,
     so callers that go on to a prefix pass materialize `per` once
-    (_reuse) first, take the totals here, and only then build the
+    first, take the totals here, and only then build the
     prefix over the same materialized rows: one window-chain execution
     per call instead of two, and the empty-side raise never pays for
     the prefix build (r15; output identical, as counts are >= 0 so
@@ -1882,7 +1882,7 @@ def wasserstein_from_counts(per: DataFrame, round_to: int = 6) -> DataFrame:
     W1 is this bounded read on top. Same exact-integer algebra and
     empty-side contract as wasserstein_1d."""
     dec = "decimal(38,0)"
-    per = _reuse(per)
+    per = materialize(per, eager=False)
     no, nn = _sample_sizes(per, "wasserstein", "W1 against an empty distribution")
     gap = (F.col("__v_next") - F.col("__v")).cast(dec)
     num = F.abs(_cdf_gap("__co", "__cn", no, nn)) * gap
@@ -1927,7 +1927,7 @@ def cvm_2sample(
     from table_computing_spark.operators.prefix import prefix_agg
 
     dec = "decimal(38,0)"
-    per = _reuse(_pooled_counts(old, new, value_col, "double"))
+    per = materialize(_pooled_counts(old, new, value_col, "double"), eager=False)
     no, nn = _sample_sizes(per, "cvm_2sample", "CvM against an empty distribution")
     pre = prefix_agg(
         per,
@@ -2171,7 +2171,7 @@ def energy_distance(
     when either side is empty. Output one row:
     (e_dist, n_old, n_new)."""
     dec = "decimal(38,0)"
-    per = _reuse(_pooled_counts(old, new, value_col, "long"))
+    per = materialize(_pooled_counts(old, new, value_col, "long"), eager=False)
     no, nn = _sample_sizes(
         per, "energy_distance", "the energy distance to an empty distribution"
     )
@@ -2225,7 +2225,7 @@ def kuiper_2sample(
     from table_computing_spark.operators.prefix import prefix_agg
 
     dec = "decimal(38,0)"
-    per = _reuse(_pooled_counts(old, new, value_col, "double"))
+    per = materialize(_pooled_counts(old, new, value_col, "double"), eager=False)
     no, nn = _sample_sizes(per, "kuiper_2sample", "Kuiper against an empty distribution")
     pre = prefix_agg(
         per,

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
 from table_computing_spark.operators.sampling import _HEX_DIGITS
 
 
@@ -52,7 +53,6 @@ def target_encode(
     Plan: one hash aggregation of (category, fold) cells, a tiny
     re-aggregation to category totals, a broadcast-sized join back —
     the label of a row can never reach its own feature."""
-    from table_computing_spark.operators._util import _reuse
 
     t = target.cast("double")
     tagged = df.withColumn("__fold", fold_of(F.col(key_col), k_folds)).withColumn(
@@ -61,11 +61,9 @@ def target_encode(
     # the (category, fold) cell table feeds FOUR branches (category
     # totals, fold totals, the global total, the enriched join) —
     # materialize once so the corpus aggregate runs once (guide §6)
-    cells = _reuse(
-        tagged.groupBy(cat_col, "__fold").agg(
-            F.sum("__t").alias("__s"), F.count(F.lit(1)).alias("__c")
-        )
-    )
+    cells = tagged.groupBy(cat_col, "__fold").agg(
+        F.sum("__t").alias("__s"), F.count(F.lit(1)).alias("__c")
+    ).transform(materialize, eager=False)
     cat_tot = cells.groupBy(cat_col).agg(
         F.sum("__s").alias("__cat_s"), F.sum("__c").alias("__cat_c")
     )

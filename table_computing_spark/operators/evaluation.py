@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 
 def roc_auc(
     df: DataFrame,
@@ -266,13 +268,11 @@ def rouge_n(
     rouge_recall, rouge_precision)."""
     from pyspark.sql.window import Window as W
 
-    from table_computing_spark.operators._util import _reuse
-
     # the pair table feeds three branches (candidate grams, reference
     # grams, the all-pairs keep join) — materialize the projected input
     # once so an expensive upstream (a corpus self-join at the q_rouge2
     # call site) doesn't execute per branch (the bleu_n fix)
-    pairs = _reuse(pairs.select(pair_col, cand_col, ref_col))
+    pairs = materialize(pairs.select(pair_col, cand_col, ref_col), eager=False)
 
     def grams(col: str, side: str) -> DataFrame:
         toks = pairs.select(
@@ -533,13 +533,11 @@ def bleu_n(
 
     from pyspark.sql.window import Window as W
 
-    from table_computing_spark.operators._util import _reuse
-
     # the pair table feeds three branches (candidate tokens, reference
     # tokens, the all-pairs keep join) — materialize the projected
     # input once so an expensive upstream (a self-join of the corpus)
     # doesn't execute per branch
-    pairs = _reuse(pairs.select(pair_col, cand_col, ref_col))
+    pairs = materialize(pairs.select(pair_col, cand_col, ref_col), eager=False)
 
     def toks(col: str) -> DataFrame:
         return pairs.select(
@@ -707,7 +705,7 @@ def bradley_terry(
     Scale shape per sweep: games ⋈ strengths (on i) ⋈ strengths (on j)
     — two shuffles on item keys — then one hash aggregate. Games and
     strengths are |items|/|pairs|-sized, never outcome-row-sized. The
-    games/wins inputs and each sweep's strengths are localCheckpoint()ed
+    games/wins inputs and each sweep's strengths are materialize()d
     (the pagerank_nano lineage rule — the twice-joined iterate
     otherwise doubles the analyzed plan per sweep).
     Output: (item, strength, wins, n_games)."""
@@ -720,7 +718,7 @@ def bradley_terry(
         )
         .groupBy("__i", "__j")
         .agg(F.count(F.lit(1)).alias("__w"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     games = (
         w.select("__i", "__j", "__w")
@@ -732,14 +730,14 @@ def bradley_terry(
         )
         .groupBy("__i", "__j")
         .agg(F.sum("__w").alias("__n"))
-        .localCheckpoint(eager=False)  # joined twice per sweep
+        .transform(materialize, eager=False)  # joined twice per sweep
     )
     wins = games.join(
         w.groupBy("__i").agg(F.sum("__w").alias("__wins")), "__i", "left"
     ).groupBy("__i").agg(
         F.coalesce(F.first("__wins"), F.lit(0)).alias("wins"),
         F.sum("__n").alias("n_games"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     p = wins.select("__i", F.lit(10**9).cast("long").alias("__pn"))
     for _ in range(iters):
         joined = (
@@ -755,18 +753,14 @@ def bradley_terry(
         # raw feeds BOTH the mean normalizer and the update — without a
         # materialize-once cut the games⋈p⋈p join + aggregate chain
         # executes twice per sweep (the hits_nano normalize shape)
-        from table_computing_spark.operators._util import _reuse
-
-        raw = _reuse(
-            wins.join(den, "__i").join(p, "__i").select(
-                "__i",
-                "__pn",
-                F.when(
-                    F.col("__dn") > 0,
-                    F.col("wins").cast("double") * 1e9 * 1e9 / F.col("__dn").cast("double"),
-                ).alias("__praw"),
-            )
-        )
+        raw = wins.join(den, "__i").join(p, "__i").select(
+            "__i",
+            "__pn",
+            F.when(
+                F.col("__dn") > 0,
+                F.col("wins").cast("double") * 1e9 * 1e9 / F.col("__dn").cast("double"),
+            ).alias("__praw"),
+        ).transform(materialize, eager=False)
         norm = raw.agg(
             F.sum(F.round(F.coalesce(F.col("__praw"), F.col("__pn").cast("double"))).cast("long")).alias("__sn"),
             F.count(F.lit(1)).alias("__cnt"),
@@ -778,7 +772,7 @@ def bradley_terry(
                 * 1e9
                 / (F.col("__sn").cast("double") / F.col("__cnt").cast("double"))
             ).cast("long").alias("__pn"),
-        ).localCheckpoint(eager=False)  # cut lineage (pagerank rule);
+        ).transform(materialize, eager=False)  # cut lineage (pagerank rule);
         # lazy: the whole sweep chain materializes in the final action
         # instead of paying one scheduled job per sweep
     return wins.join(p, "__i").select(

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from table_computing_spark.operators._util import _reuse
+from table_computing_spark.operators._util import materialize
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -136,7 +136,7 @@ def connected_components(
     against the previous round's edge set — both sets are distinct, so
     that implies set equality), never a hash that could stop early on a
     collision. Driver involvement per round is two scalars; each round
-    localCheckpoints the edge set eagerly so lineage (and the
+    materializes the edge set eagerly so lineage (and the
     re-execution cost of iteration k) stays O(1) instead of O(k) — the
     standard trap of iterative DataFrame algorithms.
 
@@ -153,13 +153,13 @@ def connected_components(
     local_threshold=0 to force the pure distributed iteration (the
     tests pin both paths)."""
     edges = _canon(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    edges = edges.localCheckpoint(eager=True)
+    edges = edges.transform(materialize, eager=True)
     prev, prev_n = edges, edges.count()
     if prev_n <= local_threshold:
         return _cc_local_finish(edges)
     for _ in range(max_iters):
         edges = _canon(_small_star(_large_star(edges)))
-        edges = edges.localCheckpoint(eager=True)
+        edges = edges.transform(materialize, eager=True)
         n = edges.count()
         if n <= local_threshold:
             return _cc_local_finish(edges)
@@ -217,7 +217,7 @@ def pagerank_nano(
 
     Per iteration: one join of edges→ranks (shuffle on src), one hash
     aggregation on dst, one left join back to the node set; ranks are
-    localCheckpoint()ed every `checkpoint_every` rounds so plan depth
+    materialize()d every `checkpoint_every` rounds so plan depth
     stays bounded without paying an eager job per round. The only
     driver scalar is the node count. Dangling-node mass is dropped
     (simplified PageRank) — documented, matched by the oracle.
@@ -233,12 +233,12 @@ def pagerank_nano(
     # pin the edge list once: its lineage may be an expensive pipeline
     # (e.g. a Jaccard inverted-index join) that would otherwise
     # re-execute for nodes, degrees, AND every iteration's join
-    edges = edges.localCheckpoint()
+    edges = edges.transform(materialize)
     nodes = (
         edges.select(F.col(src_col).alias("node"))
         .union(edges.select(F.col(dst_col).alias("node")))
         .distinct()
-        .localCheckpoint()  # reused every iteration + counted once
+        .transform(materialize)  # reused every iteration + counted once
     )
     n = nodes.count()
     if n == 0:
@@ -248,14 +248,14 @@ def pagerank_nano(
         # graph nodes; everything else starts (and restarts) at zero
         seed_nodes = (
             seeds.select("node").distinct().join(nodes, "node", "left_semi")
-        ).localCheckpoint()
+        ).transform(materialize)
         k = seed_nodes.count()
         if k == 0:
             raise ValueError("personalized pagerank: no seed is a graph node")
         flagged = nodes.join(
             seed_nodes.withColumn("__seed", F.lit(1)), "node", "left"
         ).select("node", F.coalesce("__seed", F.lit(0)).alias("__seed"))
-        nodes = flagged.localCheckpoint()
+        nodes = flagged.transform(materialize)
         base = F.lit(int((1.0 - damping) / k * 1e9 + 0.5)) * F.col("__seed")
         init = (F.lit(int(1e9 / k + 0.5)) * F.col("__seed")).cast("long")
     else:
@@ -290,7 +290,7 @@ def pagerank_nano(
         # a full job, and for small iteration counts the nested-join
         # plan is shallow enough to execute in ONE job at the end
         if checkpoint_every and it % checkpoint_every == 0:
-            rank = rank.localCheckpoint()
+            rank = rank.transform(materialize)
     return rank.select("node", F.round(F.col("rank_nano") / 1e9, 9).alias("rank"))
 
 
@@ -326,7 +326,7 @@ def triangle_counts(
     e = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     # edges feed degree + both sides of the wedge join — pin once so an
     # expensive upstream (a self-join co-occurrence build) runs once
-    e = e.localCheckpoint(eager=False)
+    e = e.transform(materialize, eager=False)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     nodes_all = e.select(F.col("u").alias("node")).union(
         e.select(F.col("v").alias("node"))
@@ -366,7 +366,7 @@ def triangle_counts(
     # of one shared union-of-projections lineage
     oriented = withk.filter(F.col("__ku") < F.col("__kv")).select(
         F.col("u").alias("src"), F.col("v").alias("dst"), F.col("__kv").alias("__kd")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     a = oriented.select(
         F.col("src"), F.col("dst").alias("x"), F.col("__kd").alias("__kx")
     )
@@ -413,12 +413,12 @@ def hits_nano(
         raise ValueError("hits_nano needs iterations >= 1")
     edges = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).localCheckpoint()
+    ).transform(materialize)
     nodes = (
         edges.select(F.col("__s").alias("node"))
         .union(edges.select(F.col("__d").alias("node")))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     hub = nodes.withColumn("hub_nano", F.lit(1_000_000_000).cast("long"))
 
@@ -427,13 +427,11 @@ def hits_nano(
         # iteration's output feeds the next iteration's join — without a
         # materialize-once cut here the plan DOUBLES per normalize (the
         # deepest subtree re-executes ~2^(2·iterations) times; 21 jobs
-        # measured at 2 iterations). _reuse makes growth linear — the
+        # measured at 2 iterations). materialize makes growth linear — the
         # canonical iterative lineage-truncation use.
-        filled = _reuse(
-            nodes.join(raw, "node", "left").select(
-                "node", F.coalesce(F.col("__x"), F.lit(0)).cast("long").alias("__x")
-            )
-        )
+        filled = nodes.join(raw, "node", "left").select(
+            "node", F.coalesce(F.col("__x"), F.lit(0)).cast("long").alias("__x")
+        ).transform(materialize, eager=False)
         total = filled.agg(F.sum("__x").alias("__sum"))
         return filled.crossJoin(F.broadcast(total)).select(
             "node",
@@ -497,15 +495,16 @@ def label_propagation(
 
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).localCheckpoint()
+    ).transform(materialize)
     sym = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
-    nodes = sym.select(F.col("__s").alias("node")).distinct().localCheckpoint()
+    nodes = sym.select(F.col("__s").alias("node")).distinct().transform(materialize)
     # one label per seed node — conflicting seed rows would duplicate
     # every downstream join row; min() makes the resolution deterministic
-    seed = _reuse(
+    seed = materialize(
         seeds.select(F.col(node_col).alias("node"), F.col(label_col).alias("__seed"))
         .groupBy("node")
-        .agg(F.min("__seed").alias("__seed"))
+        .agg(F.min("__seed").alias("__seed")),
+        eager=False,
     )
     cur = nodes.join(seed, "node", "left").select(
         "node", F.col("__seed"), F.col("__seed").alias("__lab")
@@ -530,7 +529,7 @@ def label_propagation(
         # the keep-previous fallback) — materialize each round's state
         # or the unrolled plan re-executes the prior round's chain
         # twice per iteration (the hits_nano normalize shape)
-        cur = _reuse(
+        cur = materialize(
             nodes.join(seed, "node", "left")
             .join(pick, "node", "left")
             .join(prev, "node", "left")
@@ -543,7 +542,8 @@ def label_propagation(
                 F.coalesce(
                     F.col("__seed"), F.col("__pick"), F.col("__prev")
                 ).alias("__lab"),
-            )
+            ),
+            eager=False,
         )
     return cur.select("node", F.col("__lab").alias("label"))
 
@@ -569,11 +569,11 @@ def kcore_peel(
     keys. Returns (node, degree) for surviving nodes with their final
     in-core degree."""
     e = _canon(edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")))
-    e = e.localCheckpoint()
+    e = e.transform(materialize)
     for _ in range(rounds):
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
-        # keep feeds both semi-joins, but a _reuse cut here measured
+        # keep feeds both semi-joins, but a materialize cut here measured
         # SLOWER (r15 A/B 1.45 -> 1.64 s): the two consumers share one
         # partitioning, so ReusedExchange already computes deg once —
         # unlike the hits_nano normalize, whose consumers diverge
@@ -582,7 +582,7 @@ def kcore_peel(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
@@ -612,7 +612,7 @@ def degree_assortativity(
 
     e = _canon(edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")))
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=False)
+    sym = sym.transform(materialize, eager=False)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
     both = (
         sym.join(deg, "u")
@@ -650,11 +650,11 @@ def bfs_hops(
     connected_components run when only proximity matters."""
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     sym = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
     visited = seeds.select(F.col(node_col).alias("node")).distinct().select(
         "node", F.lit(0).alias("hops")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     frontier = visited
     for h in range(1, max_hops + 1):
         reached = (
@@ -669,7 +669,7 @@ def bfs_hops(
             visited.union(reached)
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         frontier = visited.where(F.col("hops") == h)
     return visited
@@ -711,7 +711,7 @@ def adamic_adar(
     sym = (
         e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     deg = sym.groupBy(F.col("__s").alias("__w")).agg(
         F.count(F.lit(1)).alias("__deg")
@@ -806,10 +806,10 @@ def sssp_weighted(
         F.col(src_col).alias("__s"),
         F.col(dst_col).alias("__d"),
         F.col(weight_col).cast("long").alias("__w"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     dist = (
         e.sparkSession.createDataFrame([(int(source), 0)], "node long, dist long")
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     for _ in range(rounds):
         relaxed = (
@@ -820,7 +820,7 @@ def sssp_weighted(
             dist.union(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return dist
 
@@ -850,12 +850,12 @@ def topo_layers(
     shuffled on node keys; exact integers. Output: (node, layer)."""
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     nodes = (
         e.select(F.col("__s").alias("node"))
         .union(e.select(F.col("__d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     layers = nodes.select("node", F.lit(0).alias("layer"))
     for _ in range(rounds):
@@ -867,7 +867,7 @@ def topo_layers(
             layers.union(bumped)
             .groupBy("node")
             .agg(F.max("layer").alias("layer"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return layers
 
@@ -976,7 +976,7 @@ def clustering_coefficient(
     undefined, not 0. Output: (node, degree, n_triangles,
     clustering)."""
     e = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    e = e.localCheckpoint(eager=False)  # feeds degrees AND triangles
+    e = e.transform(materialize, eager=False)  # feeds degrees AND triangles
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 # monotonically_increasing_id() packs the partition id above bit 33
 _MID_SHIFT = 33
 
@@ -46,7 +48,7 @@ def dense_ids(
     contract as any distributed rank.
 
     The sorted+tagged partitions are pinned with an eager
-    localCheckpoint before fan-out: the per-partition counts and the
+    checkpoint (`materialize`) before fan-out: the per-partition counts and the
     final join must observe the SAME physical partitioning, and range
     boundary sampling is not guaranteed stable across plan branches.
     (With a total order the IDS are boundary-independent either way —
@@ -65,7 +67,7 @@ def dense_ids(
             "__local", F.col("__mid").bitwiseAND(F.lit((1 << _MID_SHIFT) - 1))
         )
         .drop("__mid")
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     counts = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     offsets = counts.select(

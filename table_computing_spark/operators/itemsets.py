@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 
 def basket_items(
     df: DataFrame, basket_col: str, item_col: str,
@@ -36,9 +38,7 @@ def basket_items(
     # the distinct set feeds both the size aggregate and the guard
     # join; materialize once so the upstream (often a join + distinct)
     # doesn't execute per branch
-    from table_computing_spark.operators._util import _reuse
-
-    bi = _reuse(bi)
+    bi = materialize(bi, eager=False)
     sizes = bi.groupBy("basket").agg(F.count(F.lit(1)).alias("__n"))
     return (
         bi.join(sizes.filter(F.col("__n") <= max_basket_items), "basket")
@@ -86,15 +86,14 @@ def association_rules(
     and round once, so the output is engine-exact. Item supports are
     broadcast back onto the (filtered, min_support-bounded) pair set.
 
-    The (basket, item) set is materialized ONCE (`_reuse`) and feeds
+    The (basket, item) set is materialized ONCE (`materialize`) and feeds
     all three consumers — the pair self-join, the item supports, and
     the basket total; the basket total itself is a lazy one-row
     aggregate broadcast into the lift division rather than a
     construction-time driver count() (which re-executed the whole
     basket chain once per call before the query ran it 3x more)."""
-    from table_computing_spark.operators._util import _reuse
 
-    bi = _reuse(basket_items(df, basket_col, item_col, max_basket_items))
+    bi = materialize(basket_items(df, basket_col, item_col, max_basket_items), eager=False)
     # exact distinct-basket total as a broadcastable one-row frame;
     # cast to double HERE so the lift division below is the same
     # double/double division the lit(float(n)) form ran

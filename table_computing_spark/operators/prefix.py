@@ -31,6 +31,8 @@ from typing import Mapping, Sequence, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 # monotonically_increasing_id packs the partition id above bit 33
 _MID_SHIFT = 33
 
@@ -81,7 +83,7 @@ def prefix_agg(
     tagged = (
         part.sortWithinPartitions(*range_cols)
         .withColumn("__pid", F.shiftright(F.monotonically_increasing_id(), _MID_SHIFT))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     end = -1 if exclusive else 0
     local_w = (

@@ -39,6 +39,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_computing_spark.operators._util import materialize
+
 
 def _order_stats(
     vals: DataFrame,
@@ -199,7 +201,7 @@ def exact_quantiles(
     )
     # the candidate-set scans re-read this subtree once per round —
     # pin it so an expensive upstream runs once
-    vals = vals.localCheckpoint(eager=False)
+    vals = vals.transform(materialize, eager=False)
     row = vals.agg(
         F.count("v").alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")
     ).first()
@@ -310,12 +312,11 @@ def global_percent_rank(
     DISTINCT values only, then a value-keyed join back (AQE broadcasts
     small value tables). Nothing global-sorts the data."""
     from table_computing_spark.operators.prefix import prefix_agg
-    from table_computing_spark.operators._util import _reuse
 
     vals = df.select(F.col(col).alias("__v")).where(F.col("__v").isNotNull())
     # the per-value count table feeds the prefix build AND the total
-    # aggregate — materialize once (the kruskal/cvm _reuse pattern)
-    counts = _reuse(vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__c")))
+    # aggregate — materialize once (the kruskal/cvm pattern)
+    counts = materialize(vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__c")), eager=False)
     cum = prefix_agg(
         counts,
         order_by=["__v"],
@@ -363,7 +364,6 @@ def weighted_quantiles(
     Output: (keys..., q, value). NULL values and NULL/non-positive
     weights are ignored (a NULL weight is not a multiplicity)."""
     from table_computing_spark.operators.prefix import prefix_agg
-    from table_computing_spark.operators._util import _reuse
 
     keys = list(keys)
     dec = "decimal(38,0)"
@@ -374,7 +374,7 @@ def weighted_quantiles(
     ).select(*keys, F.col(col).alias("__v"), F.col(weight_col).cast("long").alias("__w"))
     # the per-(group, value) weight table feeds the prefix build AND
     # the totals aggregate — materialize once (the kruskal/cvm pattern)
-    counts = _reuse(base.groupBy(*keys, "__v").agg(F.sum("__w").alias("__wi")))
+    counts = materialize(base.groupBy(*keys, "__v").agg(F.sum("__w").alias("__wi")), eager=False)
     cum = prefix_agg(
         counts,
         order_by=["__v"],

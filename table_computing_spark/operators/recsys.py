@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from table_computing_spark.operators._util import materialize
+
 
 def item_cf(
     interactions: DataFrame,
@@ -45,15 +47,12 @@ def item_cf(
 
     The distinct (user, item) set feeds FOUR branches (item supports,
     basket sizes, both self-join sides) at different partitionings —
-    materialize it once (`_reuse`) so the upstream interaction build
+    materialize it once so the upstream interaction build
     (often a join + distinct) runs once, not per branch."""
-    from table_computing_spark.operators._util import _reuse
 
-    ui = _reuse(
-        interactions.select(
-            F.col(user_col).alias("__u"), F.col(item_col).alias("__i")
-        ).distinct()
-    )
+    ui = interactions.select(
+        F.col(user_col).alias("__u"), F.col(item_col).alias("__i")
+    ).distinct().transform(materialize, eager=False)
     item_n = ui.groupBy(F.col("__i").alias("item")).agg(
         F.count(F.lit(1)).alias("__n")
     )

@@ -32,7 +32,7 @@ def _cell(c: Column, size: int) -> Column:
 # _spread before the (2·ring+1)²-way kNN cell fan-out: one round-robin
 # shuffle of the narrow (id, x, y) rows is far cheaper than serializing
 # the exploded rows from a single scan task (shared helper, r14 ADVICE).
-from table_computing_spark.operators._util import _reuse, _spread
+from table_computing_spark.operators._util import _spread, materialize
 
 
 def grid_radius_join(
@@ -320,20 +320,21 @@ def grid_dbscan(
     # radius-join subtree on every branch — a same-session alternating
     # A/B read the cuts ~1.5-2.5 s faster per run at sf0.1 with
     # bit-identical output (r14; house pattern, cf. evaluation.py's
-    # reused-subtree checkpoints). _reuse carries the cluster
-    # fault-tolerance knob (r15, _util._reuse docstring).
-    pairs = _reuse(grid_radius_join(df, id_col, x_col, y_col, eps))
-    sym = _reuse(
+    # reused-subtree checkpoints).
+    pairs = materialize(grid_radius_join(df, id_col, x_col, y_col, eps), eager=False)
+    sym = materialize(
         pairs.select(F.col("id_a").alias("id"), F.col("id_b").alias("nb"))
-        .union(pairs.select(F.col("id_b").alias("id"), F.col("id_a").alias("nb")))
+        .union(pairs.select(F.col("id_b").alias("id"), F.col("id_a").alias("nb"))),
+        eager=False,
     )
     counts = sym.groupBy("id").agg(F.count(F.lit(1)).alias("__n"))
-    flagged = _reuse(
+    flagged = materialize(
         pts.join(counts, "id", "left")
         .select(
             "id",
             (F.coalesce(F.col("__n"), F.lit(0)) + 1 >= min_pts).alias("__core"),
-        )
+        ),
+        eager=False,
     )
     cores = flagged.filter("__core").select("id")
     core_edges = (

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from table_computing_spark.operators._util import materialize
+
 
 def kaplan_meier(
     df: DataFrame,
@@ -212,15 +214,11 @@ def logrank_test(
     # risked feeds BOTH per-group slices (the __g filters push below
     # the windows, so a/b are separate executions of the whole
     # grid + window chain without a cut) — materialize once (guide §6)
-    from table_computing_spark.operators._util import _reuse
-
-    risked = _reuse(
-        grid.select(
-            "__g", "t", "n_event",
-            (total - left_through + F.col("n_event") + F.col("n_censor"))
-            .alias("n_risk"),
-        )
-    )
+    risked = grid.select(
+        "__g", "t", "n_event",
+        (total - left_through + F.col("n_event") + F.col("n_censor"))
+        .alias("n_risk"),
+    ).transform(materialize, eager=False)
     a = risked.filter(F.col("__g") == 1).select(
         "t", F.col("n_event").alias("__da"), F.col("n_risk").alias("__na")
     )

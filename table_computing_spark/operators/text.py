@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from table_computing_spark.operators._util import materialize
 from table_computing_spark.table import ColumnLike, _col
 
 # word-ish tokens: letter runs | digit runs | any other non-space symbol
@@ -1137,16 +1138,12 @@ def kn_bigram_nll(
     # the scored join; c12 feeds FOUR consumers (left-context mass,
     # continuation counts, the type total, the scored join) —
     # materialize each once (guide §6)
-    from table_computing_spark.operators._util import _reuse
+    bgr = tok_rows.select(
+        "__id", F.col("__tok").alias("__w1"), nxt.alias("__w2")
+    ).filter(F.col("__w2").isNotNull()).transform(materialize, eager=False)
 
-    bgr = _reuse(
-        tok_rows.select(
-            "__id", F.col("__tok").alias("__w1"), nxt.alias("__w2")
-        ).filter(F.col("__w2").isNotNull())
-    )
-
-    c12 = _reuse(
-        bgr.groupBy("__w1", "__w2").agg(F.count(F.lit(1)).alias("__c12"))
+    c12 = materialize(
+        bgr.groupBy("__w1", "__w2").agg(F.count(F.lit(1)).alias("__c12")), eager=False
     )
     c1 = c12.groupBy("__w1").agg(
         F.sum("__c12").alias("__c1"),
@@ -1229,13 +1226,12 @@ def cooccur_pmi(
     # cab feeds the pair total AND the scored join; uni feeds the token
     # total AND both unigram joins — materialize each once so the
     # corpus explode + shuffle doesn't execute per consumer (guide §6)
-    from table_computing_spark.operators._util import _reuse
-
-    cab = _reuse(pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")))
-    uni = _reuse(
+    cab = materialize(pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")), eager=False)
+    uni = materialize(
         df.select(F.explode(toks).alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c_w"))
+        .agg(F.count(F.lit(1)).alias("c_w")),
+        eager=False,
     )
     totals = cab.agg(F.sum("c_ab").alias("__T")).crossJoin(
         uni.agg(F.sum("c_w").alias("__N"))

@@ -9,7 +9,11 @@ once so every entry point (tests, bench, driver) runs the same config.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -82,3 +86,20 @@ def get_spark(app_name: str = "table-computing-spark", **overrides: str) -> Spar
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_scratch_lock = threading.Lock()
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str = "tc_") -> str:
+    """A fresh directory for the files a query leaves behind (stream
+    slices, checkpoints, state) under one root per process, made on
+    first use and removed at interpreter exit, not per query: the
+    DataFrames a query returns may still read these files."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="tc_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +47,7 @@ def kafka_connector_available(spark: SparkSession) -> bool:
             _KAFKA_PROVIDER
         )
         return True
-    except Exception:
+    except Py4JJavaError:  # ClassNotFoundException
         return False
 
 

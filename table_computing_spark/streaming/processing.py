@@ -14,11 +14,12 @@ global error propagation → query exception surfaced on await/stop.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from table_computing_spark.session import scratch_dir
 
 
 class StreamProcessing:
@@ -32,7 +33,7 @@ class StreamProcessing:
     """
 
     def __init__(self, checkpoint_root: str | None = None, bounded: bool = False):
-        self._checkpoint_root = checkpoint_root or tempfile.mkdtemp(prefix="tc_ckpt_")
+        self._checkpoint_root = checkpoint_root or scratch_dir("tc_ckpt_")
         self._bounded = bounded  # availableNow: drain sources then finish
         self._queries: list[StreamingQuery] = []
         self._n = 0

@@ -680,7 +680,8 @@ def stream_page_hinkley(
 
     Rows must arrive per key in nondecreasing `order_col` across
     micro-batches (the stream_over_by_size ordering contract); within
-    a batch they are sorted. Increments are nano-quantized BEFORE the
+    a batch they are sorted by (order, value), the batch operator's
+    tie-break. Increments are nano-quantized BEFORE the
     running sum (the batch operator's rule), accumulated in Python
     ints inside the JSON state (arbitrary precision — no wrap), and
     the per-batch extension is one numpy cumsum/accumulate pass, not a
@@ -702,7 +703,8 @@ def stream_page_hinkley(
         else:
             st = {"n": 0, "sum": 0, "m": 0, "min": 0}
         batch = pd.concat(list(pdfs), ignore_index=True)[cols]
-        batch = batch.sort_values(order_col, kind="mergesort").reset_index(drop=True)
+        order = [order_col, value_col]  # ties broken by value, as in batch
+        batch = batch.sort_values(order, kind="mergesort").reset_index(drop=True)
         x = batch[value_col].to_numpy(dtype="float64")
         k = len(x)
         run_n = st["n"] + np.arange(1, k + 1, dtype="float64")

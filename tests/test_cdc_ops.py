@@ -379,7 +379,7 @@ def test_bpe_checkpoint_swap_releases_only_its_own_blocks(spark):
     class _RacingCheckpoint:
         sparkSession = spark
 
-        def localCheckpoint(self):
+        def localCheckpoint(self, eager=True):
             foreign.append(spark.range(5).selectExpr("id * 3 AS x").localCheckpoint())
             return spark.range(4).localCheckpoint()
 

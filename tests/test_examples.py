@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 import pytest
 
@@ -53,7 +52,7 @@ def _ids():
     return [re.sub(r"\W+", "_", t)[:48] for t, _ in BLOCKS]
 
 
-def _seed_ns(spark) -> dict:
+def _seed_ns(spark, tmp) -> dict:
     """Every free variable any EXAMPLES block references, built from
     the sf0.001 testdata. All lazily-planned DataFrames — seeding cost
     is near zero until a block acts on one."""
@@ -159,7 +158,6 @@ def _seed_ns(spark) -> dict:
         (F.col("n_chars") > 400).cast("int").alias("is_good"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="tc_examples_")
     csv_path = os.path.join(tmp, "ingest.csv")
     with open(csv_path, "w") as f:
         f.write("1,alpha,100\n2,beta,200\nnot-a-row\n3,gamma,300\n")
@@ -319,7 +317,7 @@ def _seed_ns(spark) -> dict:
 
 
 @pytest.mark.parametrize(("title", "code"), BLOCKS, ids=_ids())
-def test_examples_block_runs(spark, title, code):
+def test_examples_block_runs(spark, tmp_path, title, code):
     # §1 calls get_spark(), whose tuned defaults (shuffle.partitions=32
     # etc.) land on the SHARED pytest session via getOrCreate and would
     # leak into later suites (the skew tests calibrate against the
@@ -334,7 +332,7 @@ def test_examples_block_runs(spark, title, code):
         except Exception:  # noqa: BLE001 — unset key
             before[k] = None
     try:
-        ns = _seed_ns(spark)
+        ns = _seed_ns(spark, str(tmp_path))
         code = code.replace("/root/testdata/sf0.01", SF_DIR)
         exec(compile(code, f"EXAMPLES.md::{title}", "exec"), ns)  # noqa: S102
     finally:

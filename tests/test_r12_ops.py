@@ -400,20 +400,18 @@ def test_rbo_identical_disjoint_and_half(spark):
     assert half["rbo"] == round(1.25 * (0.5 / 0.75), 6)
 
 
-def test_stream_page_hinkley_matches_batch(spark, tmp_path):
-    """The streaming PH (two sequential micro-batches, state carried)
-    must equal the batch operator row-for-row — including rows whose
-    running mean crosses the batch boundary."""
+def _page_hinkley_stream_and_batch(spark, tmp_path, rows, cut):
+    """(stream rows, batch rows) of page-Hinkley over `rows` (g, t, x):
+    the stream replays t < cut and t >= cut as two micro-batches with
+    state carried; both sides sorted as (g, t, x, ph, alarm) tuples."""
     import os
 
     from table_computing_spark.operators.temporal import page_hinkley
     from table_computing_spark.streaming.stateful import stream_page_hinkley
 
-    rows = [("k", t, v) for t, v in enumerate([5, 5, 5, 5, 30, 30, 5, 5, 40, 40])]
-    rows += [("j", t, v) for t, v in enumerate([2, 2, 2, 9, 9])]
     df = spark.createDataFrame(rows, "g string, t int, x int")
     src = os.path.join(str(tmp_path), "src")
-    for cond in (F.col("t") < 5, F.col("t") >= 5):
+    for cond in (F.col("t") < cut, F.col("t") >= cut):
         df.where(cond).coalesce(1).write.mode("append").parquet(src)
     sdf = (
         spark.readStream.schema(df.schema)
@@ -429,17 +427,34 @@ def test_stream_page_hinkley_matches_batch(spark, tmp_path):
         .start()
     )
     _await_stream(q, 120)
-    got = {
-        (r["g"], r["t"]): (r["ph"], r["alarm"])
-        for r in spark.table("tc_sph_test").collect()
-    }
-    want = {
-        (r["g"], r["t"]): (r["ph"], r["alarm"])
-        for r in page_hinkley(df, ["g"], "t", F.col("x"), lam=10.0).collect()
-    }
-    assert got == want and len(got) == 15
-    assert any(a for _, a in got.values())  # the jumps do alarm
+    cols = ["g", "t", "x", "ph", "alarm"]
+    got = sorted(tuple(r) for r in spark.table("tc_sph_test").select(cols).collect())
+    spark.catalog.dropTempView("tc_sph_test")
+    batch = page_hinkley(df, ["g"], "t", F.col("x"), lam=10.0).withColumnRenamed("value", "x")
+    return got, sorted(tuple(r) for r in batch.select(cols).collect())
 
+
+def test_stream_page_hinkley_matches_batch(spark, tmp_path):
+    """The streaming PH (two sequential micro-batches, state carried)
+    must equal the batch operator row-for-row — including rows whose
+    running mean crosses the batch boundary."""
+    rows = [("k", t, v) for t, v in enumerate([5, 5, 5, 5, 30, 30, 5, 5, 40, 40])]
+    rows += [("j", t, v) for t, v in enumerate([2, 2, 2, 9, 9])]
+    got, want = _page_hinkley_stream_and_batch(spark, tmp_path, rows, 5)
+    assert got == want and len(got) == 15
+    assert any(r[4] for r in got)  # the jumps do alarm
+
+
+def test_stream_page_hinkley_breaks_order_ties_by_value_like_batch(spark, tmp_path):
+    """Rows sharing an order value inside one micro-batch run in (order,
+    value) order, as in the batch operator. The slices are written with
+    each tie's larger value first, so a sort on the order column alone
+    keeps the file order and gives different ph values."""
+    vals = [(0, 9), (0, 1), (1, 30), (1, 2), (2, 7), (2, 7), (3, 50), (3, 4),
+            (4, 40), (4, 3), (5, 60), (5, 1), (6, 8), (6, 5), (7, 90), (7, 2)]
+    rows = [("k", t, v) for t, v in vals] + [("j", t, v * 3) for t, v in vals]
+    got, want = _page_hinkley_stream_and_batch(spark, tmp_path, rows, 4)
+    assert got == want and len(got) == 32
 
 # --------------------------------------------------------------- r12c
 

@@ -103,7 +103,7 @@ def test_swap_checkpoint_unreadable_id_claims_nothing(spark):
     class _NoLogicalRDD:
         sparkSession = spark
 
-        def localCheckpoint(self):
+        def localCheckpoint(self, eager=True):
             return spark.range(10)  # plan is a Range, not a LogicalRDD
 
     out, new_ids = bpe._swap_checkpoint(_NoLogicalRDD(), set())

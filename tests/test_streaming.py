@@ -1664,3 +1664,19 @@ def test_timewindow_watermark_reorder_goldens(spark, tmp_path_factory):
     assert _rows(got.select("window_start", "n"), "window_start") == [
         (3, 2), (5, 1), (9, 1), (100, 1), (101, 1), (105, 2), (109, 2),
     ]
+
+
+def test_stream_result_outlives_its_memory_sink_view(spark):
+    """A stream query's result frame keeps its rows after the memory
+    sink's session-wide view is dropped, and no tc_stream_q_* view is
+    left in the catalog."""
+    import __spark_entry__ as m
+    from tests.oracle import compare, duck_con
+
+    sf_dir = "/root/testdata/sf0.001"
+    df = m.q_streaming_tumble(spark, sf_dir)
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("tc_stream_q_")]
+    con = duck_con(sf_dir)
+    issues = compare(df, con.sql(m.oracle_sql()["q_streaming_tumble"]))
+    assert not issues, issues

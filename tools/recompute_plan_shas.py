@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Recompute every query's plan fingerprint in a build-only session
-(no execution — plans render in ~0.1 s each) and patch the result into
-BENCH_LOCAL.json["plan_sha"], printing the diff vs the committed
-PLAN_FINGERPRINTS.json baseline.
+"""Recompute every query's plan fingerprint without running the
+queries and patch the result into BENCH_LOCAL.json["plan_sha"],
+printing the diff vs the committed PLAN_FINGERPRINTS.json baseline.
+Building the plans is not free: construction's eager driver-side
+actions run over 1,400 Spark stages, about 5 minutes at sf0.1 on a
+4-core host, until plans are built lazily.
 
 Use-case: the normalizer in plans.plan_fingerprint changed (e.g. the
 r11 RewriteDistinctAggregates canonicalization) and the baseline must
